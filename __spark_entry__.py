@@ -2407,6 +2407,10 @@ _FILL_R13 = (
 # exactly 50 stale names after CORRECTNESS_r14 landed (last green
 # r12), so the r15 window = HORIZON_STALE_R15 verbatim — a full
 # window, zero spare slots, no debuts/fills.
+# r16 (simplicity round, no contract growth): the tripwire named 46
+# stale queries after CORRECTNESS_r15 landed (last green r13), so the
+# r16 window = HORIZON_STALE_R16 verbatim + 4 fill entries whose code
+# paths changed this round (_FILL_R16) = 50.
 # --------------------------------------------------------------------- #
 
 # The 46 queries the staleness tripwire named verbatim after
@@ -2546,8 +2550,71 @@ HORIZON_STALE_R15 = (
     "count",
 )
 
+# The 46 queries the staleness tripwire named verbatim after
+# CORRECTNESS_r15 landed (last hash-green r13), in tripwire emission
+# order.
+HORIZON_STALE_R16 = (
+    "lang_id",
+    "doc_fingerprint",
+    "winnow_fingerprints",
+    "bm25_topk",
+    "bm25_postings_store",
+    "bm25_takedown_serve",
+    "bloom_pruned_multiget",
+    "hybrid_pinned_serve",
+    "tfidf_keywords",
+    "redact_pii",
+    "contamination_check",
+    "dedup_exact",
+    "minhash_signatures",
+    "dedup_lsh_candidates",
+    "simhash",
+    "dedup_ngram_jaccard",
+    "simhash_near_pairs",
+    "remove_duplicate_spans",
+    "semantic_dedup",
+    "embedding_neardup",
+    "similarity_ann_ivf_det",
+    "dedup_clusters",
+    "top_orders_per_customer",
+    "global_topk_orders",
+    "rollup_doc_counts",
+    "customers_without_orders",
+    "orders_above_cust_avg",
+    "funnel_purchase_after_signup",
+    "funnel_signup_conversion",
+    "hash_split",
+    "doc_sample",
+    "scd2_merge",
+    "cohort_retention",
+    "ordered_funnel",
+    "ewma_by_user",
+    "supplier_diversity",
+    "grouping_sets_doc_stats",
+    "percentiles_by_segment",
+    "asof_join",
+    "distinct_counts",
+    "revenue_percentiles",
+    "tumbling_window",
+    "session_window",
+    "similarity_ann_binary",
+    "dsir_select",
+    "lm_cross_entropy",
+)
+
+# The 4 spare slots: contract entries whose code changed this round —
+# IndexedDataFrame.multiget (point-index routing) and multiput_df
+# (signature), reached by multiput_merge and, through multiput, by the
+# short/char key cycles.
+_FILL_R16 = (
+    "multiget",
+    "multiput_merge",
+    "short_key_ops",
+    "char_key_ops",
+)
+
 _ALL = {**EXTENSION_QUERIES, **_NEW_R3, **_NEW_R8}
-_WINDOW = HORIZON_STALE_R15
+_WINDOW = HORIZON_STALE_R16 + _FILL_R16
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     **{k: _ALL.get(k, CORE_QUERIES.get(k)) for k in _WINDOW},

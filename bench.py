@@ -23,10 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from spark_indexedrdd_spark.core import SUM_MERGE  # noqa: E402
-from spark_indexedrdd_spark.operators.point import (  # noqa: E402
-    NativeHashPointIndex,
-    PointLookupIndex,
-)
+from spark_indexedrdd_spark.operators.point import NativeHashPointIndex  # noqa: E402
 from spark_indexedrdd_spark.session import get_spark  # noqa: E402
 from spark_indexedrdd_spark.sources.tables import load_table, orders_kv  # noqa: E402
 
@@ -46,13 +43,15 @@ def _sf_from_dir(d: str) -> float:
 # rounds so every round pays its own build/materialization.
 ROUNDS = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "3"))
 
-# The round-1 benchmark suite (BENCH_r01.json's exact query keys) — the
-# set "value" sums over so the BASELINE 2x gate stays apples-to-apples
-# as the suite grows (see main()).
+# The round-1 benchmark suite (BENCH_r01.json's query keys) — the set
+# "value" sums over so the BASELINE 2x gate stays apples-to-apples as the
+# suite grows (see main()). Two round-1 keys are gone with the index class
+# they timed: point_index_build and multiget_targeted duplicated
+# native_index_build and multiget_native once the two point indexes
+# became one.
 BASELINE_R1_QUERIES = frozenset(
     {
-        "build_index", "multiget_isin", "point_index_build",
-        "multiget_targeted", "native_index_build", "multiget_native",
+        "build_index", "multiget_isin", "native_index_build", "multiget_native",
         "multiput_merge", "delete", "diff", "inner_join", "left_join",
         "full_outer_join", "join_update", "aggregate_using_index",
         "scan_count", "pricing_summary", "pricing_summary_fast",
@@ -115,15 +114,7 @@ def run_suite(spark, only: frozenset | None = None) -> dict[str, float]:
     def _mget():
         assert len(kv.multiget(ks)) >= 900
 
-    @timed("point_index_build")
-    def _pib():
-        state["pli"] = PointLookupIndex(kv)
-
-    @timed("multiget_targeted")
-    def _mget2():
-        assert len(state["pli"].multiget(ks)) >= 900
-
-    # native index: reuses the frame's own partitioning (no pickle shuffle)
+    # point index: reuses the frame's own partitioning (no shuffle)
     @timed("native_index_build")
     def _nib():
         state["nli"] = NativeHashPointIndex(kv)
@@ -1183,12 +1174,12 @@ def run_suite(spark, only: frozenset | None = None) -> dict[str, float]:
 
     @timed("readme_1m_point_index")
     def _r1mi():
-        state["pli1m"] = PointLookupIndex(state["kv1m"])
+        state["nli1m"] = NativeHashPointIndex(state["kv1m"])
 
     @timed("readme_1m_multiget_1k")
     def _r1mg():
         ks1m = list(range(1, 1_000_001, 1000))
-        assert len(state["pli1m"].multiget(ks1m)) == 1000
+        assert len(state["nli1m"].multiget(ks1m)) == 1000
 
     @timed("readme_1m_put_get_delete")
     def _r1pgd():
@@ -1219,7 +1210,7 @@ def main() -> None:
     gate_rounds = 0
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "300"))
     t_start = time.perf_counter()
-    # Phase 1 — the 2x-gate subset (BENCH_r01.json's 34 queries) gets
+    # Phase 1 — the 2x-gate subset (BENCH_r01.json's queries) gets
     # its OWN 3-round min-of-N loop so the gate number keeps a 3-round
     # noise floor even now that the full suite (~130-165 s/round)
     # no longer fits 3x inside the budget (r6 VERDICT item 3: the
@@ -1268,7 +1259,7 @@ def main() -> None:
         "full_suite_rounds": len(round_totals),
         "detail": "BENCH_LOCAL.json",
         # Per-query record for the driver (r14 VERDICT item 1): the
-        # 34-query gate subset at centisecond precision is ~1.1 kB —
+        # 32-query gate subset at centisecond precision is ~1.1 kB —
         # inside the driver's 2 kB tail capture now that console noise
         # is silenced above. build_index doubles as the machine-noise
         # control (this VM shows ±25%–3x transient slow phases; a

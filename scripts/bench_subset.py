@@ -20,8 +20,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # consumer -> producers that must run first (state or on-disk store)
 DEPS: dict[str, tuple[str, ...]] = {
     "multiget_isin": ("build_index",),
-    "point_index_build": ("build_index",),
-    "multiget_targeted": ("build_index", "point_index_build"),
     "native_index_build": ("build_index",),
     "multiget_native": ("build_index", "native_index_build"),
     "multiput_merge": ("build_index",),

@@ -17,8 +17,8 @@ This is the PySpark-native re-expression of the reference's
 3. **a cached columnar form** — ``.cache()`` stands in for the
    per-partition ART index (PARTPartition.scala:26-40): point reads are
    in-memory columnar filters with short-circuit scan, and the optional
-   RDD fast path in ``operators/point.py`` reproduces the
-   touch-only-owning-partitions property of multiget
+   point index attached by ``with_point_index()`` (``operators/point.py``)
+   reproduces the touch-only-owning-partitions property of multiget
    (IndexedRDD.scala:79-94).
 
 Every mutation (put/multiput/delete/…) is **functional**: it returns a new
@@ -429,13 +429,13 @@ class IndexedDataFrame:
         Filter + collect on the cached columnar form; Catalyst
         short-circuits non-matching batches via in-memory column stats.
         For the strict touch-only-owning-partitions behavior on huge
-        cached indexes, see ``operators.point.PointLookupIndex``.
+        cached indexes, attach ``with_point_index()``.
         Missing keys are absent from the result (reference :93).
         """
         key_tuples = [self._key_tuple(k) for k in ks]
         if not key_tuples:
             return {}
-        if self._pindex is not None and len(self.value_cols) == 1:
+        if self._pindex is not None:
             # attached index: schedule only the owning partitions
             single = len(self.keys) == 1
             return self._pindex.multiget(
@@ -559,7 +559,9 @@ class IndexedDataFrame:
         Built once, reused; returns self for chaining. Later put/delete
         versions answer their own mutations from the overlay and route
         the remainder here — no rebuild per version (the reference's
-        shared-index property)."""
+        shared-index property). Single-value frames only (the only
+        frames ``multiget`` routes to an index); raises ``ValueError``
+        otherwise."""
         if self._pindex is None:
             from spark_indexedrdd_spark.operators.point import (
                 NativeHashPointIndex,
@@ -621,7 +623,7 @@ class IndexedDataFrame:
         updates = local_rows_df(
             spark, rows, self.df.select(*self.keys, v).schema
         )
-        out = self.multiput_df(updates, f=f, z=z, broadcast_updates=True)
+        out = self.multiput_df(updates, f=f, z=z)
         if z is IDENTITY and coerce is not None:
             # Point-read overlay. Two flavors:
             # - f=OVERWRITE: the merged value IS the driver-supplied value,
@@ -655,7 +657,6 @@ class IndexedDataFrame:
         updates: DataFrame | "IndexedDataFrame",
         f: MergeFn = OVERWRITE,
         z: InitFn = IDENTITY,
-        broadcast_updates: bool = False,  # kept for API compat; see hint note below
     ) -> "IndexedDataFrame":
         """Distributed batch upsert (reference multiputRDD,
         IndexedRDD.scala:122-164; kernel PARTPartition.scala:51-61).
@@ -670,9 +671,8 @@ class IndexedDataFrame:
         Updates may carry duplicate keys; they are pre-folded with ``f``
         so the join side has unique keys (map-side partial aggregation).
         Scale: base side is already hash-partitioned on key, so only the
-        updates side shuffles. (``broadcast_updates`` is a no-op: full
-        outer joins cannot broadcast a side; the SHUFFLE_HASH hint below
-        is the fast path for small batches.)
+        updates side shuffles. (Full outer joins cannot broadcast a side;
+        the SHUFFLE_HASH hint below is the fast path for small batches.)
         """
         v = self._single_value()
         up = self._align(updates)
@@ -967,7 +967,11 @@ class IndexedDataFrame:
         return self
 
     def unpersist(self, blocking: bool = False) -> "IndexedDataFrame":
+        """Release the cached columnar form and any attached point index."""
         self.df.unpersist(blocking)
+        if self._pindex is not None:
+            self._pindex.unpersist()
+            self._pindex = None
         return self
 
     def set_name(self, name: str) -> "IndexedDataFrame":

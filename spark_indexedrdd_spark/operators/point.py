@@ -5,25 +5,23 @@ driver with the partitioner and launches a job on ONLY those partitions
 (``context.runJob(partitionsRDD, fn, partitions)``,
 reference IndexedRDD.scala:79-94); untouched partitions are never
 scheduled. DataFrames cannot express "run on a subset of cached
-partitions", so :class:`PointLookupIndex` reproduces the property with the
-RDD API: hash-partition pairs by key, build one hash-map per partition
-(the dict stands in for the per-partition ART tree,
-reference PARTPartition.scala:26-40), and ``sc.runJob`` on just the owning
-partitions.
+partitions", so :class:`NativeHashPointIndex` reproduces the property with
+the RDD API: build one hash-map per hash partition of the frame (the dict
+stands in for the per-partition ART tree, reference PARTPartition.scala:
+26-40), route each key to its partition with Spark's own Murmur3 on the
+driver (``hashing.py``), and ``sc.runJob`` on just the owning partitions.
 
 Scale: on a 1000-executor cluster a multiget of k keys schedules at most
 min(k, n) tasks and moves only the requested values to the driver — same
-asymptotics as the reference. This is an *optional* fast path: the
-DataFrame ``isin`` filter in ``IndexedDataFrame.multiget`` is the
-correctness-checked default.
+asymptotics as the reference. This is an *optional* fast path, attached
+with ``IndexedDataFrame.with_point_index()``: the DataFrame ``isin``
+filter in ``IndexedDataFrame.multiget`` is the correctness-checked default.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable
 from typing import Any
-
-import zlib
 
 from pyspark import TaskContext
 
@@ -36,49 +34,26 @@ from spark_indexedrdd_spark.hashing import (
 )
 
 
-def stable_hash(key: Any) -> int:
-    """Process-independent key hash (the partitioner function).
-
-    PySpark's ``portable_hash`` relies on the interpreter's ``hash()``,
-    which for strings differs between the driver and worker processes
-    unless PYTHONHASHSEED is pinned. The partitioner is our global index
-    (reference IndexedRDD.scala:42) — the driver must compute the same
-    partition id the workers did, so use a pure function of the key's
-    repr instead."""
-    if isinstance(key, tuple):
-        h = 0x345678
-        for item in key:
-            h = (h * 1000003) ^ stable_hash(item)
-        return h & 0x7FFFFFFF
-    if isinstance(key, int):
-        return key & 0x7FFFFFFF
-    return zlib.crc32(repr(key).encode("utf-8")) & 0x7FFFFFFF
-
-
 class NativeHashPointIndex:
-    """Zero-extra-shuffle point index: reuses the IndexedDataFrame's OWN
-    hash partitioning instead of re-partitioning through a Python RDD.
+    """Per-partition hash index over a single-value IndexedDataFrame.
 
     ``df.repartition(n, *keys)`` places each row in physical partition
     ``pmod(murmur3_hash(keys), n)`` — verified empirically for long,
-    string, and composite keys (tests/test_point_lookup.py). So the
-    per-partition dicts are built straight off the cached partitions
-    (one narrow scan, no partitionBy pickle shuffle), and a multiget
-    computes the owning partitions with one tiny hash-of-literals job,
-    then ``sc.runJob`` touches only those partitions — the reference's
-    multiget scheduling (IndexedRDD.scala:79-94) with Spark's own
-    partitioner as the global index, exactly as the reference uses ITS
-    partitioner (IndexedRDD.scala:42).
+    string, and composite keys (tests/test_point_lookup.py). So for a
+    frame that follows the build contract the per-partition dicts are
+    built straight off its cached partitions (one narrow scan, no
+    shuffle), and a multiget routes keys with Spark's own partitioner as
+    the global index, exactly as the reference uses ITS partitioner
+    (IndexedRDD.scala:42).
 
-    Requires the frame to follow the build contract (an explicit
-    ``repartition(num_partitions, *keys)`` output — REPARTITION_BY_NUM,
-    which AQE never coalesces). Joins/aggregations derived from it also
-    satisfy hash partitioning, but their runtime partition COUNT can be
-    AQE-coalesced; reindex() first for derived frames."""
+    Derived frames (joins, aggregations) keep the hash layout but AQE may
+    coalesce their runtime partition COUNT below ``num_partitions``. Such
+    a frame is re-laid out once with ``repartition(n, *keys)`` — one JVM
+    exchange — so the same driver-side routing stays valid."""
 
     def __init__(self, idf: IndexedDataFrame):
+        idf._single_value()
         self.keys = list(idf.keys)
-        self.value_cols = list(idf.value_cols)
         self.n = idf.num_partitions
         self._spark = idf.df.sparkSession
         self._key_schema = idf.df.select(*self.keys).schema
@@ -86,17 +61,18 @@ class NativeHashPointIndex:
         # None -> owning_partitions asks Spark with a hash-of-literals job
         self._hashers = hashers_for_schema(self._key_schema)
         nk = len(self.keys)
-        single_key = nk == 1
-        single_val = len(self.value_cols) == 1
 
         def to_dict(it):
             d = {}
             for row in it:
-                k = row[0] if single_key else tuple(row[:nk])
-                d[k] = row[nk] if single_val else tuple(row[nk:])
+                d[row[0] if nk == 1 else tuple(row[:nk])] = row[nk]
             return iter([d])
 
-        self._parts = idf.df.rdd.mapPartitions(
+        base = idf.df.rdd
+        if base.getNumPartitions() != self.n:
+            # layout guard: rows no longer sit in pmod(murmur3(keys), n)
+            base = idf.df.repartition(self.n, *self.keys).rdd
+        self._parts = base.mapPartitions(
             to_dict, preservesPartitioning=True
         ).cache()
         self._parts.count()
@@ -127,109 +103,22 @@ class NativeHashPointIndex:
         return by_part
 
     def multiget(self, ks: Iterable[Any]) -> dict:
+        """Probe only the owning partitions (reference IndexedRDD.scala:80-92)."""
         ks = list(ks)
         if not ks:
             return {}
         key_tuples = [k if isinstance(k, tuple) else (k,) for k in ks]
         by_part = self.owning_partitions(key_tuples)
-        target_parts = sorted(by_part)
 
         def probe(iterator):
-            pid = TaskContext.get().partitionId()
-            wanted = by_part.get(pid, [])
-            for d in iterator:
-                return [(k, d[k]) for k in wanted if k in d]
-            return []
-
-        sc = self._parts.context
-        found = sc.runJob(self._parts, probe, partitions=target_parts)
-        if len(self.keys) == 1:
-            return dict(found)
-        return dict(found)
-
-    def get(self, key: Any):
-        k = key if isinstance(key, tuple) or len(self.keys) == 1 else (key,)
-        return self.multiget([k]).get(k)
-
-    def unpersist(self) -> None:
-        self._parts.unpersist()
-
-
-class PointLookupIndex:
-    """Per-partition hash index over an IndexedDataFrame's entries.
-
-    Fast path: when every key type has a driver-side Murmur3 (hashing.py)
-    and the frame's physical partition count matches the build contract,
-    the dicts are built straight off the frame's OWN hash layout — one
-    narrow scan, no Python ``partitionBy`` pickle shuffle — and
-    ``partition_of`` is a driver-side computation. Frames with exotic key
-    types or a non-contract layout (e.g. AQE-coalesced derived frames)
-    take the layout-independent ``stable_hash`` shuffle path instead."""
-
-    def __init__(self, idf: IndexedDataFrame):
-        self.keys = list(idf.keys)
-        self.value_cols = list(idf.value_cols)
-        self.n = idf.num_partitions
-        nk = len(self.keys)
-        single_key = nk == 1
-        single_val = len(self.value_cols) == 1
-        self._hashers = hashers_for_schema(idf.df.select(*self.keys).schema)
-
-        def to_dict(it):
-            d = {}
-            for row in it:
-                k = row[0] if single_key else tuple(row[:nk])
-                d[k] = row[nk] if single_val else tuple(row[nk:])
-            return iter([d])
-
-        base = idf.df.rdd
-        if self._hashers is not None and base.getNumPartitions() == self.n:
-            # rows already live in pmod(murmur3(keys), n) (build contract):
-            # index in place, zero extra shuffle
-            self._parts = base.mapPartitions(
-                to_dict, preservesPartitioning=True
-            ).cache()
-        else:
-            self._hashers = None  # partition_of must mirror stable_hash
-
-            def to_pair(row):
-                k = row[0] if single_key else tuple(row[:nk])
-                v = row[nk] if single_val else tuple(row[nk:])
-                return (k, v)
-
-            pairs = base.map(to_pair).partitionBy(self.n, stable_hash)
-            self._parts = pairs.mapPartitions(
-                lambda it: iter([dict(it)]), preservesPartitioning=True
-            ).cache()
-        self._parts.count()  # materialize
-
-    def partition_of(self, key: Any) -> int:
-        if self._hashers is not None:
-            kt = key if isinstance(key, tuple) else (key,)
-            return spark_partition_of(kt, self._hashers, self.n)
-        return stable_hash(key) % self.n
-
-    def multiget(self, ks: Iterable[Any]) -> dict:
-        """Probe only the owning partitions (reference IndexedRDD.scala:80-92)."""
-        ks = list(ks)
-        if not ks:
-            return {}
-        by_part: dict[int, list] = {}
-        for k in ks:
-            by_part.setdefault(self.partition_of(k), []).append(k)
-        target_parts = sorted(by_part)
-
-        def probe(iterator):
-            pid = TaskContext.get().partitionId()
-            wanted = by_part.get(pid, [])
+            wanted = by_part.get(TaskContext.get().partitionId(), [])
             for d in iterator:  # exactly one dict per partition
                 return [(k, d[k]) for k in wanted if k in d]
             return []
 
         sc = self._parts.context
         # runJob flattens the per-partition lists into one list of pairs
-        found = sc.runJob(self._parts, probe, partitions=target_parts)
-        return dict(found)
+        return dict(sc.runJob(self._parts, probe, partitions=sorted(by_part)))
 
     def get(self, key: Any):
         return self.multiget([key]).get(key)

@@ -45,6 +45,7 @@ from spark_indexedrdd_spark.core import (
     SUM_MERGE,
     IndexedDataFrame,
 )
+from spark_indexedrdd_spark.functions.store_commit import checkpoint_namespace
 
 _MERGES = {"overwrite": OVERWRITE, "sum": SUM_MERGE}
 
@@ -367,28 +368,13 @@ class VersionedKVStore:
         past that legacy watermark (or the store must be vacuumed on a
         pinned manifest before the old entries prune)."""
 
-        def _ns() -> str:
-            # Spark writes <ckpt>/metadata = {"id": "<query-uuid>"} at
-            # query start, stable across restarts of the SAME
-            # checkpoint, fresh for a new one — exactly the batch-id
-            # monotonicity domain. Fall back to legacy un-namespaced
-            # tags if the file is unreadable (e.g. a non-local
-            # checkpoint store this code cannot open directly).
-            try:
-                import json as _json
-
-                with open(os.path.join(checkpoint_dir, "metadata")) as fh:
-                    return _json.load(fh)["id"].replace("-", "")[:12]
-            except Exception:
-                return ""
-
         ns_cache: "list[str | None]" = [None]
 
         def _fb(batch_df, batch_id: int) -> None:
             if not batch_df.take(1):
                 return
             if ns_cache[0] is None:
-                ns_cache[0] = _ns()
+                ns_cache[0] = checkpoint_namespace(checkpoint_dir)
             ns = ns_cache[0]
             tag = f"batch-{ns}-{batch_id}" if ns else f"batch-{batch_id}"
             if ns and self._tagged(

@@ -10,9 +10,11 @@ Each micro-batch:
 2. ``multiput_df`` merges it into the current version (shuffled-hash
    full outer: the base never re-shuffles or sorts),
 3. every ``compact_every`` batches, ``reindex()`` materializes the
-   accumulated join chain into the cache and unpersists the ancestors —
-   bounding plan depth exactly like the reference's ``reindex()`` forcing
-   a LazyPartition merge (LazyPartition.scala:134-135).
+   accumulated join chain into the cache and unpersists the previous
+   compaction's cached frame (unless ``keep_history`` still serves it;
+   the caller-supplied base is never released) — bounding plan depth
+   and cache footprint exactly like the reference's ``reindex()``
+   forcing a LazyPartition merge (LazyPartition.scala:134-135).
 
 Versions are retained: ``history[i]`` is the IndexedDataFrame after batch
 i, still queryable (the reference's multi-version README demo).
@@ -37,6 +39,8 @@ class StreamingKVStore:
         self.keep_history = keep_history
         self.history: list[IndexedDataFrame] = []
         self._batches = 0
+        # the last reindex() output: cached by this store, so owned by it
+        self._compacted: IndexedDataFrame | None = None
 
     def foreach_batch(self, batch_df, batch_id: int) -> None:
         """Pass to ``writeStream.foreachBatch``. Expects batch rows of
@@ -47,6 +51,9 @@ class StreamingKVStore:
         self._batches += 1
         if self._batches % self.compact_every == 0:
             updated = updated.reindex()
+            if self._compacted is not None and not self.keep_history:
+                self._compacted.unpersist()
+            self._compacted = updated
         if self.keep_history:
             self.history.append(self.current)
         self.current = updated

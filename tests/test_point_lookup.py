@@ -2,9 +2,10 @@
 (reference IndexedRDD.scala:79-94)."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from spark_indexedrdd_spark.core import IndexedDataFrame
-from spark_indexedrdd_spark.operators.point import PointLookupIndex, stable_hash
+from spark_indexedrdd_spark.operators.point import NativeHashPointIndex
 
 
 @pytest.fixture(scope="module")
@@ -14,10 +15,10 @@ def idx(spark):
 
 
 def test_multiget_hits_and_misses(idx):
-    pli = PointLookupIndex(idx)
-    assert pli.multiget([0, 7, 199, -1, 1000]) == {0: 0, 7: 14, 199: 398}
-    assert pli.get(42) == 84
-    assert pli.get(-42) is None
+    ni = NativeHashPointIndex(idx)
+    assert ni.multiget([0, 7, 199, -1, 1000]) == {0: 0, 7: 14, 199: 398}
+    assert ni.get(42) == 84
+    assert ni.get(-42) is None
 
 
 def test_string_keys(spark):
@@ -25,20 +26,28 @@ def test_string_keys(spark):
         [(f"key{i}", i) for i in range(50)], "k string, v long"
     )
     idx = IndexedDataFrame.build(df, "k", num_partitions=4)
-    pli = PointLookupIndex(idx)
-    assert pli.multiget(["key0", "key49", "nope"]) == {"key0": 0, "key49": 49}
+    ni = NativeHashPointIndex(idx)
+    assert ni.multiget(["key0", "key49", "nope"]) == {"key0": 0, "key49": 49}
 
 
 def test_composite_keys(spark):
+    # a timestamp component has no driver-side hash, so routing takes
+    # the hash-of-literals job instead of hashing.py
+    import datetime
+
+    t0 = datetime.datetime(2026, 1, 1)
+    ts = [t0 + datetime.timedelta(hours=j) for j in range(3)]
     df = spark.createDataFrame(
-        [(i, f"s{j}", i + j) for i in range(10) for j in range(3)],
-        "k1 long, k2 string, v long",
+        [(i, ts[j], i + j) for i in range(10) for j in range(3)],
+        "k1 long, k2 timestamp, v long",
     )
     idx = IndexedDataFrame.build(df, ["k1", "k2"], num_partitions=4)
-    pli = PointLookupIndex(idx)
-    assert pli.multiget([(0, "s0"), (9, "s2"), (5, "nope")]) == {
-        (0, "s0"): 0,
-        (9, "s2"): 11,
+    ni = NativeHashPointIndex(idx)
+    assert ni._hashers is None
+    missing = (5, t0 - datetime.timedelta(days=1))
+    assert ni.multiget([(0, ts[0]), (9, ts[2]), missing]) == {
+        (0, ts[0]): 0,
+        (9, ts[2]): 11,
     }
 
 
@@ -79,8 +88,6 @@ def test_native_index_partition_layout_assumption(spark):
 
 
 def test_native_index_multiget(spark):
-    from spark_indexedrdd_spark.operators.point import NativeHashPointIndex
-
     df = spark.createDataFrame([(i, i * 3) for i in range(300)], "k long, v long")
     idx = IndexedDataFrame.build(df, "k", num_partitions=6)
     ni = NativeHashPointIndex(idx)
@@ -92,8 +99,6 @@ def test_native_index_multiget(spark):
 
 
 def test_native_index_composite(spark):
-    from spark_indexedrdd_spark.operators.point import NativeHashPointIndex
-
     df = spark.createDataFrame(
         [(i, f"s{j}", i * 10 + j) for i in range(20) for j in range(3)],
         "k1 long, k2 string, v long",
@@ -106,17 +111,29 @@ def test_native_index_composite(spark):
     }
 
 
-def test_stable_hash_deterministic():
-    assert stable_hash("abc") == stable_hash("abc")
-    assert stable_hash((1, "a")) == stable_hash((1, "a"))
-    assert stable_hash(7) == 7
+def test_targets_only_owning_partitions(idx, monkeypatch):
+    ni = NativeHashPointIndex(idx)
+    sc_cls = type(ni._parts.context)
+    run_job = sc_cls.runJob
+    scheduled = []
 
+    def spy(self, rdd, fn, partitions=None, *a, **kw):
+        scheduled.append(partitions)
+        return run_job(self, rdd, fn, partitions, *a, **kw)
 
-def test_targets_only_owning_partitions(idx):
-    pli = PointLookupIndex(idx)
+    monkeypatch.setattr(sc_cls, "runJob", spy)
     ks = [3, 17]
-    parts = {pli.partition_of(k) for k in ks}
-    assert len(parts) <= 2  # the job plan touches at most these
+    assert ni.multiget(ks) == {3: 6, 17: 34}
+    owners = ni.owning_partitions([(k,) for k in ks])
+    # the job plan touches only the owning partitions ...
+    assert scheduled == [sorted(owners)] and len(owners) <= 2
+    # ... which are where the rows physically live
+    placed = dict(
+        idx.df.rdd.mapPartitionsWithIndex(
+            lambda pid, it: [(r[0], pid) for r in it]
+        ).collect()
+    )
+    assert all(placed[k] == p for p, kk in owners.items() for k in kk)
 
 
 # --------------------------------------------------------------------- #
@@ -168,29 +185,89 @@ def test_timestamp_keys_have_no_driver_hash(spark):
     assert H.hashers_for_schema(schema) is None
 
 
-def test_pli_native_path_used_for_contract_frames(spark):
-    df = spark.createDataFrame([(i, i) for i in range(100)], "k long, v long")
-    idx = IndexedDataFrame.build(df, "k", num_partitions=5)
-    pli = PointLookupIndex(idx)
-    assert pli._hashers is not None  # zero-extra-shuffle layout
-    assert pli.multiget([0, 99, 1000]) == {0: 0, 99: 99}
+def _contract_frame(spark, df):
+    return IndexedDataFrame.build(df, "k", num_partitions=5)
 
 
-def test_pli_falls_back_when_layout_breaks_contract(spark):
-    # frame whose physical partition count disagrees with num_partitions:
-    # the layout-independent stable_hash path must kick in and still be
-    # correct
+def _broken_layout_frame(spark, df):
+    # physical partition count disagrees with num_partitions
+    return IndexedDataFrame(df.repartition(3, "k").cache(), ["k"], 7)
+
+
+def _coalesced_agg_frame(spark, df):
+    # contract count = shuffle partitions, so the hash-agg's own exchange
+    # is the layout — and AQE coalesces that exchange on small input
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    base = IndexedDataFrame.from_unique(df, "k", num_partitions=n)
+    return base.aggregate_using_index_expr(
+        df.select("k", F.col("v").alias("m")), F.sum("m"), alias="v"
+    )
+
+
+@pytest.mark.parametrize(
+    "make, in_place",
+    [
+        pytest.param(_contract_frame, True, id="contract"),
+        pytest.param(_broken_layout_frame, False, id="broken_layout"),
+        pytest.param(_coalesced_agg_frame, False, id="coalesced_agg"),
+    ],
+)
+def test_index_layout_guard(spark, monkeypatch, make, in_place):
+    """Contract frames are indexed in place (no repartition); a frame
+    whose physical partition count breaks the contract is re-laid out
+    once, and either way the index answers like the plain multiget."""
     df = spark.createDataFrame([(i, i * 3) for i in range(100)], "k long, v long")
-    idx = IndexedDataFrame(df.repartition(3, "k").cache(), ["k"], 7)
-    pli = PointLookupIndex(idx)
-    assert pli._hashers is None
-    assert pli.multiget([0, 50, 99, -5]) == {0: 0, 50: 150, 99: 297}
-    assert 0 <= pli.partition_of(12345) < 7
+    idf = make(spark, df)
+    assert (idf.df.rdd.getNumPartitions() == idf.num_partitions) == in_place
+    ks = [0, 50, 99, -5]
+    plain = idf.multiget(ks)
+    assert plain == {0: 0, 50: 150, 99: 297}
+
+    df_cls = type(idf.df)
+    repartition = df_cls.repartition
+    calls = []
+
+    def spy(self, *a, **kw):
+        calls.append(a)
+        return repartition(self, *a, **kw)
+
+    monkeypatch.setattr(df_cls, "repartition", spy)
+    assert idf.with_point_index() is idf
+    monkeypatch.undo()
+    assert len(calls) == (0 if in_place else 1)
+
+    assert idf.multiget(ks) == plain
+    ni = idf._pindex
+    assert ni._parts.getNumPartitions() == idf.num_partitions
+    # every key sits in the partition the driver routes it to
+    placed = ni._parts.mapPartitionsWithIndex(
+        lambda pid, it: [(pid, k) for d in it for k in d]
+    ).collect()
+    owners = ni.owning_partitions([(k,) for _, k in placed])
+    assert all(k in owners[pid] for pid, k in placed)
+
+
+def test_with_point_index_requires_single_value(spark):
+    df = spark.createDataFrame([(1, 2, 3)], "k long, a long, b long")
+    idf = IndexedDataFrame.build(df, "k", num_partitions=2)
+    with pytest.raises(ValueError, match="single value column"):
+        idf.with_point_index()
+    assert idf._pindex is None
+
+
+def test_unpersist_releases_point_index(spark):
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(i, i) for i in range(50)], "k long, v long")
+    before = sc._jsc.getPersistentRDDs().size()
+    idf = IndexedDataFrame.build(df, "k", num_partitions=4).with_point_index()
+    # the cached frame and the index's per-partition dicts
+    assert sc._jsc.getPersistentRDDs().size() == before + 2
+    idf.unpersist(blocking=True)
+    assert idf._pindex is None
+    assert sc._jsc.getPersistentRDDs().size() == before
 
 
 def test_nli_owning_partitions_driver_side(spark):
-    from spark_indexedrdd_spark.operators.point import NativeHashPointIndex
-
     df = spark.createDataFrame(
         [(f"doc{i}", float(i)) for i in range(80)], "k string, v double"
     )

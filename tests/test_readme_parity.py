@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_indexedrdd_spark.core import IndexedDataFrame
-from spark_indexedrdd_spark.operators.point import PointLookupIndex
+from spark_indexedrdd_spark.operators.point import NativeHashPointIndex
 
 
 def test_readme_million_entry_demo(spark):
@@ -26,9 +26,9 @@ def test_readme_million_entry_demo(spark):
     assert kv.get(1234) == 0
 
     # rdd.get(1234L) via the targeted-partition fast path
-    pli = PointLookupIndex(v2)
-    assert pli.get(1234) == 10873
-    assert pli.multiget([1, 500_000, 1_000_000, -7]) == {
+    ni = NativeHashPointIndex(v2)
+    assert ni.get(1234) == 10873
+    assert ni.multiget([1, 500_000, 1_000_000, -7]) == {
         1: 0,
         500_000: 0,
         1_000_000: 0,

@@ -50,3 +50,48 @@ def test_streaming_kv_matches_batch(spark, sf_dir):
     # multi-version property: history is still queryable and older
     if store.history:
         assert store.history[0].count() <= store.current.count()
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("keep_history", [False, True])
+def test_compaction_releases_replaced_versions(spark, keep_history):
+    """Each compaction caches a new version; the one it replaces is
+    released unless history still serves it, so the cache footprint of
+    a long-running stream stays bounded. The caller's base stays cached."""
+    from pyspark import StorageLevel
+
+    base = IndexedDataFrame.build(
+        spark.createDataFrame([(k, 0.0) for k in range(8)], "k long, v double"),
+        "k",
+        num_partitions=2,
+    )
+    base.count()
+    before = _persistent_rdds(spark)
+    store = StreamingKVStore(
+        base, merge=SUM_MERGE, compact_every=4, keep_history=keep_history
+    )
+    n_batches = 20 if not keep_history else 8
+    counts = []
+    for b in range(n_batches):
+        # JVM-only batch: no Python worker per micro-batch
+        batch = spark.range(1).select(
+            F.lit(b % 8).cast("long").alias("k"), F.lit(1.0).alias("v")
+        )
+        store.foreach_batch(batch, b)
+        counts.append(_persistent_rdds(spark) - before)
+    compactions = n_batches // 4
+    if keep_history:
+        # every compacted version is still served from the cache
+        assert counts[-1] == compactions
+    else:
+        assert max(counts) <= 1, counts
+    assert base.df.storageLevel != StorageLevel.NONE
+    got = {r["k"]: r["v"] for r in store.current.collect()}
+    assert got == {k: float(sum(1 for b in range(n_batches) if b % 8 == k))
+                   for k in range(8)}
+    store.current.unpersist()
+    for v in store.history:
+        v.unpersist()
