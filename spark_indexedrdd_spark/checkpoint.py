@@ -53,3 +53,13 @@ def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
         f"unknown SPARK_GRAFT_CHECKPOINT mode {mode!r} "
         "(expected 'local' or 'reliable')"
     )
+
+
+def release_lineage(df: DataFrame) -> None:
+    """Drop the blocks a ``truncate_lineage`` output holds (a local
+    checkpoint's executor blocks; a reliable checkpoint's files are the
+    checkpoint directory's). Only for a frame its caller owns: nothing
+    derived from ``df`` can be read afterwards."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)

@@ -12,8 +12,10 @@ restores the invariant "a crash anywhere leaves either the old
 committed store gone (clearly uncommitted) or the new one fully
 committed"; the re-run is idempotent either way.
 
-(sources/versioned.py keeps its own manifest format — a version LEDGER,
-not a single commit marker — and is not a client of this module.)
+(sources/versioned.py is a client too: its ``meta.json`` carries the
+COW version log, every init/commit/compaction/vacuum publishes through
+:func:`commit_meta`, and its replay ledger is ``applied`` /
+``applied_watermarks`` with :func:`tag_is_applied`.)
 
 Which stores carry a marker, and which deliberately don't:
 
@@ -22,7 +24,9 @@ Which stores carry a marker, and which deliberately don't:
   IVF: centroids+vectors; IVFPQ: codes+centroids+codebooks; binary:
   sketches+vectors; n-gram counts: meta-pinned bucketization;
   classifier model: meta-pinned n_buckets+bias; zone-map and bloom
-  sidecar stores: meta-pinned zone/key column + m/k). Mixing builds
+  sidecar stores: meta-pinned zone/key column + m/k; versioned KV
+  store: meta-pinned version log naming each version's attempt
+  directory). Mixing builds
   there is silent corruption, so the marker is mandatory. Scope: the
   marker fences REBUILDS. Append paths are fenced per family: postings
   appends commit through the manifest pointer below (exact, snapshot-
@@ -212,6 +216,14 @@ def commit_meta(
             os.close(lock_fd)  # closing releases the flock
 
 
+def _conflict(path: str, new: int) -> ConcurrentWriteConflict:
+    return ConcurrentWriteConflict(
+        f"store at {path!r}: version {new} was committed by another "
+        "writer since this meta was read — re-run the operation against "
+        "the current store"
+    )
+
+
 def _commit_meta_locked(
     path: str,
     meta: dict,
@@ -223,6 +235,12 @@ def _commit_meta_locked(
 ) -> None:
     """The reserve→publish body of :func:`commit_meta` — runs under the
     per-store writer flock when the filesystem provides one."""
+    if _committed_frontier(path) >= new:
+        # a base older than the frontier is stale even when its ledger
+        # slot is free: vacuums reclaim ledger files below the frontier,
+        # and the exclusive create alone would then let a stale writer
+        # publish over the winner
+        raise _conflict(path, new)
     try:
         fd = os.open(vpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
     except FileExistsError:
@@ -238,11 +256,7 @@ def _commit_meta_locked(
             # committed past our base must NOT overwrite the winner's
             # committed ledger file and roll the frontier backward —
             # it re-reads the frontier and re-commits above it
-            raise ConcurrentWriteConflict(
-                f"store at {path!r}: version {new} was committed by "
-                "another writer since this meta was read — re-run the "
-                "operation against the current store"
-            )
+            raise _conflict(path, new)
         # dead reservation from a crashed writer (committed < new by
         # the check above): overwrite atomically
         tmp = vpath + ".tmp"

@@ -9,19 +9,27 @@ Each micro-batch:
 1. pre-aggregates the batch to unique keys (map-side combine),
 2. ``multiput_df`` merges it into the current version (shuffled-hash
    full outer: the base never re-shuffles or sorts),
-3. every ``compact_every`` batches, ``reindex()`` materializes the
-   accumulated join chain into the cache and unpersists the previous
-   compaction's cached frame (unless ``keep_history`` still serves it;
-   the caller-supplied base is never released) — bounding plan depth
-   and cache footprint exactly like the reference's ``reindex()``
-   forcing a LazyPartition merge (LazyPartition.scala:134-135).
+3. every ``compact_every`` batches, the accumulated join chain is
+   materialized through ``checkpoint.truncate_lineage`` (repartitioned
+   on the keys, so the partitioning contract holds) and the previous
+   compaction's blocks are released (unless ``keep_history`` still
+   serves it; the caller-supplied base is never released) — bounding
+   plan depth and cache footprint exactly like the reference's
+   ``reindex()`` forcing a LazyPartition merge
+   (LazyPartition.scala:134-135). Cutting the lineage keeps planning
+   cost flat: a cached ``reindex()`` would still embed every earlier
+   batch in each later plan.
 
 Versions are retained: ``history[i]`` is the IndexedDataFrame after batch
-i, still queryable (the reference's multi-version README demo).
+i, still queryable (the reference's multi-version README demo). Without
+``keep_history`` a frame from before the latest compaction has no
+lineage left once its blocks are released, so hold versions through
+``keep_history``, not through saved references to ``current``.
 """
 
 from __future__ import annotations
 
+from spark_indexedrdd_spark.checkpoint import release_lineage, truncate_lineage
 from spark_indexedrdd_spark.core import IndexedDataFrame, MergeFn, SUM_MERGE
 
 
@@ -39,7 +47,7 @@ class StreamingKVStore:
         self.keep_history = keep_history
         self.history: list[IndexedDataFrame] = []
         self._batches = 0
-        # the last reindex() output: cached by this store, so owned by it
+        # the last compaction: materialized by this store, so owned by it
         self._compacted: IndexedDataFrame | None = None
 
     def foreach_batch(self, batch_df, batch_id: int) -> None:
@@ -50,9 +58,15 @@ class StreamingKVStore:
         updated = self.current.multiput_df(batch_df, f=self.merge)
         self._batches += 1
         if self._batches % self.compact_every == 0:
-            updated = updated.reindex()
+            updated = IndexedDataFrame(
+                truncate_lineage(
+                    updated.df.repartition(updated.num_partitions, *updated.keys)
+                ),
+                updated.keys,
+                updated.num_partitions,
+            )
             if self._compacted is not None and not self.keep_history:
-                self._compacted.unpersist()
+                release_lineage(self._compacted.df)
             self._compacted = updated
         if self.keep_history:
             self.history.append(self.current)

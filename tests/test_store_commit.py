@@ -596,6 +596,27 @@ def test_conflict_leaves_loser_dict_unstamped(tmp_path):
     assert SC.read_meta(p)["a"] == 2
 
 
+def test_stale_base_conflicts_after_ledger_files_are_reclaimed(tmp_path):
+    """Vacuums delete ledger files below the committed frontier; a
+    writer whose base is that old must still conflict, not take the
+    freed slot and publish over the winner."""
+    import os
+
+    p = str(tmp_path / "reclaimed")
+    SC.commit_meta(p, {"a": 1})
+    stale = SC.read_meta(p)
+    for a in (2, 3):
+        m = SC.read_meta(p)
+        m["a"] = a
+        SC.commit_meta(p, m)
+    for v in (1, 2):
+        os.remove(os.path.join(p, "_versions", f"{v:020d}.json"))
+    stale["a"] = 99
+    with pytest.raises(SC.ConcurrentWriteConflict):
+        SC.commit_meta(p, stale)
+    assert SC.read_meta(p)["a"] == 3 and SC.read_meta(p)["version"] == 3
+
+
 def test_rebuild_reclaims_dead_reservation(tmp_path):
     """A crashed writer's reservation above the frontier must be
     RECLAIMED by a rebuild, not skipped — skipping would leave a

@@ -7,6 +7,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from spark_indexedrdd_spark.checkpoint import release_lineage
 from spark_indexedrdd_spark.core import SUM_MERGE, IndexedDataFrame
 from spark_indexedrdd_spark.sources.tables import load_table
 from spark_indexedrdd_spark.streaming.kv_sink import StreamingKVStore
@@ -52,8 +53,10 @@ def test_streaming_kv_matches_batch(spark, sf_dir):
         assert store.history[0].count() <= store.current.count()
 
 
-def _persistent_rdds(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persistent_rdds(spark) -> set:
+    # ids, not a count: Spark holds persisted RDDs weakly, so an earlier
+    # test's RDD collected mid-test must not shift the figure
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
 @pytest.mark.parametrize("keep_history", [False, True])
@@ -81,7 +84,7 @@ def test_compaction_releases_replaced_versions(spark, keep_history):
             F.lit(b % 8).cast("long").alias("k"), F.lit(1.0).alias("v")
         )
         store.foreach_batch(batch, b)
-        counts.append(_persistent_rdds(spark) - before)
+        counts.append(len(_persistent_rdds(spark) - before))
     compactions = n_batches // 4
     if keep_history:
         # every compacted version is still served from the cache
@@ -92,6 +95,32 @@ def test_compaction_releases_replaced_versions(spark, keep_history):
     got = {r["k"]: r["v"] for r in store.current.collect()}
     assert got == {k: float(sum(1 for b in range(n_batches) if b % 8 == k))
                    for k in range(8)}
-    store.current.unpersist()
-    for v in store.history:
+    for v in [store.current, *store.history]:
+        release_lineage(v.df)
         v.unpersist()
+
+
+def test_compaction_plan_size_stays_flat(spark):
+    """Compaction cuts the lineage: the compacted frame's plan does not
+    grow with the number of batches folded before it."""
+    base = IndexedDataFrame.from_unique(
+        spark.range(8).select(F.col("id").alias("k"), F.lit(0.0).alias("v")),
+        "k",
+        num_partitions=2,
+        cache=False,
+    )
+    store = StreamingKVStore(base, merge=SUM_MERGE, compact_every=2)
+    sizes = []
+    for b in range(20):
+        batch = spark.range(1).select(
+            F.lit(b % 8).cast("long").alias("k"), F.lit(1.0).alias("v")
+        )
+        store.foreach_batch(batch, b)
+        if b % 2 == 1:
+            plan = store.current.df._jdf.queryExecution().analyzed()
+            sizes.append(plan.treeString().count("\n"))
+    assert len(sizes) == 10 and max(sizes) == min(sizes), sizes
+    got = {r["k"]: r["v"] for r in store.current.collect()}
+    assert got == {k: float(sum(1 for b in range(20) if b % 8 == k))
+                   for k in range(8)}
+    release_lineage(store.current.df)

@@ -251,10 +251,12 @@ def test_fresh_checkpoint_never_drops_below_another_runs_watermark(
     )
     store.compact()
     store.vacuum(keep_versions=1, prune_manifest=True)
-    m = json.load(open(os.path.join(store.path, "manifest.json")))
-    wms = m["pruned_batch_watermark"]
-    assert wms and all("max_id" in w for w in wms.values())
-    assert "" not in wms, "stream_ingest tags should be namespaced now"
+    m = json.load(open(os.path.join(store.path, "meta.json")))
+    wms = m["applied_watermarks"]
+    assert wms and all(isinstance(w, int) for w in wms.values())
+    assert all(len(stem) == 13 for stem in wms), (
+        "stream_ingest tags should be namespaced now"
+    )
     pre = _as_dict(store.read())
     assert (pre[1], pre[2], pre[3]) == (1.0, 2.0, 3.0)
     # run B: a FRESH checkpoint, ids restart at 0 — every batch must
@@ -269,12 +271,12 @@ def test_fresh_checkpoint_never_drops_below_another_runs_watermark(
         "replay watermark"
     )
     # and run A's pruned ids still replay as no-ops in THEIR namespace
-    ns = next(iter(wms))
+    stem = next(iter(wms))
     v_replay = store.commit_puts(
         spark.createDataFrame([(1, 99.0)], "k long, v double"),
-        merge="sum", tag=f"batch-{ns}-0",
+        merge="sum", tag=f"{stem}0",
     )
-    assert v_replay == int(wms[ns]["v"])
+    assert v_replay == m["vacuum_floor"]
     assert _as_dict(store.read()) == got
 
 
@@ -337,7 +339,7 @@ def test_vacuum_prune_manifest_drops_dead_entries_same_refusals(store, spark):
     pre = _as_dict(store.read(v3))
     dead = store.vacuum(keep_versions=1, prune_manifest=True)
     assert dead == [0, v1, v2]
-    with open(os.path.join(store.path, "manifest.json")) as fh:
+    with open(os.path.join(store.path, "meta.json")) as fh:
         m = json.load(fh)
     assert [e["v"] for e in m["versions"]] == [v3]
     for v in dead:
@@ -364,9 +366,8 @@ def test_prune_manifest_keeps_tagged_replay_idempotent(store, spark):
     redelivered batch whose log entry was pruned (checkpoint reset,
     at-least-once source) would otherwise re-apply as the NEWEST
     version: overwrite-merge would resurrect stale values over later
-    updates. Monotonic 'batch-<id>' tags fold into the O(1)
-    pruned_batch_watermark (r12 ADVICE: the per-tag map grew one entry
-    per pruned commit forever); operator tags keep the exact map."""
+    updates. Pruned tags move to the replay ledger (``applied``), and
+    a replay returns the vacuum floor, which read() serves."""
     ups = spark.createDataFrame([(1, 100.0)], "k long, v double")
     v1 = store.commit_puts(ups, tag="batch-0")
     v2 = store.commit_puts(
@@ -377,11 +378,11 @@ def test_prune_manifest_keeps_tagged_replay_idempotent(store, spark):
     store.vacuum(keep_versions=1, prune_manifest=True)
     pre = _as_dict(store.read())
     assert pre[1] == 777.0
-    # redeliver BOTH pruned batches: must be no-ops (a below-floor
-    # version id comes back — the watermark's, since per-id versions
-    # are exactly what the O(1) summary sheds), never new commits
+    # redeliver BOTH pruned batches: must be no-ops (the vacuum floor
+    # comes back — the oldest servable version, which contains them),
+    # never new commits
     replay_v = store.commit_puts(ups, tag="batch-0")
-    assert replay_v == v2 and replay_v >= v1 and replay_v < v3
+    assert replay_v == v3 and replay_v > v2 > v1
     assert _as_dict(store.read()) == pre, (
         "a replayed pruned batch re-applied — stale value resurrected"
     )
@@ -396,39 +397,41 @@ def test_prune_manifest_keeps_tagged_replay_idempotent(store, spark):
 
 @pytest.mark.slow
 def test_pruned_replay_ledger_is_bounded(store, spark):
-    """r12 ADVICE: pruned_tags grew one entry per pruned tagged commit
-    FOREVER — a year of micro-batches left an O(commits) map parsed on
-    every manifest read. Monotonic batch tags must compact into the
-    single watermark across repeated prune cycles, while operator tags
-    (human cadence) keep their exact {tag: v} entries."""
+    """r12 ADVICE: the replay ledger must not grow one entry per pruned
+    tagged commit FOREVER — a year of micro-batches would leave an
+    O(commits) list parsed on every meta read. Checkpoint-namespaced
+    stream tags must compact into one watermark across repeated prune
+    cycles, while operator tags (human cadence) keep exact entries."""
     import json as _json
     import os as _os
 
     ups = lambda v: spark.createDataFrame([(1, v)], "k long, v double")  # noqa: E731
     op_v = store.commit_puts(ups(5.0), tag="initial-load")
     n_batches = 12
+    ns = "0123456789ab"  # a checkpoint namespace (StreamTagMixin form)
     batch_vs = {}
     for i in range(n_batches):
-        batch_vs[i] = store.commit_puts(ups(float(i)), tag=f"batch-{i}")
+        batch_vs[i] = store.commit_puts(ups(float(i)), tag=f"{ns}-{i}")
         if i % 4 == 3:
             store.compact()
             store.vacuum(keep_versions=1, prune_manifest=True)
-    with open(_os.path.join(store.path, "manifest.json")) as fh:
+    with open(_os.path.join(store.path, "meta.json")) as fh:
         m = _json.load(fh)
     # the replay ledger is O(1) for streaming: one watermark, and the
-    # exact map holds only the operator tag — NOT one entry per batch
-    assert set(m.get("pruned_tags", {})) == {"initial-load"}
-    # r14: the watermark is a per-checkpoint-namespace map; legacy
-    # un-namespaced 'batch-<id>' tags land in namespace ""
-    wm = m["pruned_batch_watermark"][""]
+    # exact list holds only the operator tag — NOT one entry per batch
+    assert set(m.get("applied", [])) == {"initial-load"}
+    # the watermark is a per-checkpoint-namespace map
+    wm = m["applied_watermarks"][f"{ns}-"]
     pruned_ids = [i for i in batch_vs if batch_vs[i] < m["vacuum_floor"]]
-    assert int(wm["max_id"]) == max(pruned_ids)
-    # every pruned batch id replays as a no-op through the watermark
+    assert int(wm) == max(pruned_ids)
+    # every pruned batch id replays as a no-op through the watermark,
+    # returning the vacuum floor
     pre = _as_dict(store.read())
     for i in pruned_ids:
-        assert store.commit_puts(ups(-1.0), tag=f"batch-{i}") == int(wm["v"])
-    # the operator tag replays as a no-op with its EXACT version
-    assert store.commit_puts(ups(-1.0), tag="initial-load") == op_v
+        assert store.commit_puts(ups(-1.0), tag=f"{ns}-{i}") == m["vacuum_floor"]
+    # the pruned operator tag replays as a no-op too
+    assert op_v < m["vacuum_floor"]
+    assert store.commit_puts(ups(-1.0), tag="initial-load") == m["vacuum_floor"]
     assert _as_dict(store.read()) == pre
 
 
@@ -499,8 +502,8 @@ def test_cow_lifecycle_model_with_pruning(spark, tmp_path_factory, ops):
         if op in ("put", "put_replay", "batch_put"):
             # batch_put uses stream_ingest's monotonic tag form, whose
             # pruned-replay ledger is the O(1) watermark rather than
-            # the exact {tag: v} map (r13)
-            tag = f"batch-{n}" if op == "batch_put" else f"p{n}"
+            # the exact tag list
+            tag = f"0123456789ab-{n}" if op == "batch_put" else f"p{n}"
             df = spark.createDataFrame(
                 [(n % 7, 1000.0 + n), (100 + n, float(n))],
                 "k long, v double",
@@ -530,15 +533,19 @@ def test_cow_lifecycle_model_with_pruning(spark, tmp_path_factory, ops):
         live = {r.k: r.v for r in s.read().df.collect()}
         assert live == model, (op, len(live), len(model))
     # EVERY tag ever committed — pruned or not — replays as a no-op
-    # returning its original version, and the live table is unmoved
+    # returning its original version while its entry is logged, the
+    # vacuum floor once pruned, and the live table is unmoved
+    listed = set(s.versions())
+    floor = min(listed)
     for tag, v in seen_tags.items():
         df = spark.createDataFrame([(999, -1.0)], "k long, v double")
+        want = v if v in listed else floor
         if tag.startswith("p"):
-            assert s.commit_puts(df, tag=tag) == v
+            assert s.commit_puts(df, tag=tag) == want
         else:
             assert s.commit_deletes(
                 spark.createDataFrame([(999,)], "k long"), tag=tag
-            ) == v
+            ) == want
     # batch-form tags replay as no-ops too; once pruned they resolve
     # through the O(1) watermark, so the returned id is SOME
     # already-committed version (never a new commit), not necessarily
@@ -551,3 +558,233 @@ def test_cow_lifecycle_model_with_pruning(spark, tmp_path_factory, ops):
         assert s.commit_puts(df, tag=tag) <= frontier
     live = {r.k: r.v for r in s.read().df.collect()}
     assert live == model and 999 not in live
+
+
+# ------------- commit protocol: races, crashes, legacy stores ------------- #
+
+from spark_indexedrdd_spark.functions.store_commit import (  # noqa: E402
+    ConcurrentWriteConflict,
+)
+from spark_indexedrdd_spark.localframe import local_rows_df  # noqa: E402
+
+
+def _kv(spark, rows):
+    return local_rows_df(spark, rows, "k long, v double")
+
+
+def _range_store(spark, path, n=10):
+    base = spark.range(n).select("id", F.col("id").cast("double").alias("v"))
+    idf = IndexedDataFrame.from_unique(
+        base.withColumnRenamed("id", "k"), "k", num_partitions=2, cache=False
+    )
+    return VersionedKVStore.init(idf, path)
+
+
+def test_racing_writers_one_conflicts_none_lost(spark, tmp_path):
+    """Two writers read the log before either publishes: exactly one
+    commit raises ConcurrentWriteConflict, the winner's rows read back,
+    and no version id is listed twice."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    path = str(tmp_path / "race")
+    _range_store(spark, path)
+    a = VersionedKVStore.open(spark, path)
+    b = VersionedKVStore.open(spark, path)
+    # each commit reads the log, then writes its data: holding both data
+    # writes at a barrier means both logs were read before either publish
+    barrier = threading.Barrier(2, timeout=120)
+    raw = DataFrameWriter.parquet
+
+    def held(self, *args, **kw):
+        barrier.wait()
+        return raw(self, *args, **kw)
+
+    out = {}
+
+    def commit(name, store, row):
+        try:
+            out[name] = store.commit_puts(_kv(spark, [row]))
+        except ConcurrentWriteConflict as e:
+            out[name] = e
+
+    DataFrameWriter.parquet = held
+    try:
+        ts = [
+            threading.Thread(target=commit, args=("a", a, (1, 10.0))),
+            threading.Thread(target=commit, args=("b", b, (2, 20.0))),
+        ]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join()
+    finally:
+        DataFrameWriter.parquet = raw
+    lost = [n for n, r in out.items() if isinstance(r, ConcurrentWriteConflict)]
+    assert len(lost) == 1, out
+    won = "b" if lost == ["a"] else "a"
+    assert out[won] == 1
+    vs = a.versions()
+    assert vs == sorted(set(vs)) == [0, 1]
+    got = _as_dict(a.read())
+    if won == "a":
+        assert got[1] == 10.0 and got[2] == 2.0
+    else:
+        assert got[2] == 20.0 and got[1] == 1.0
+    # the loser's retry lands on top of the winner
+    assert (a if lost == ["a"] else b).commit_puts(
+        _kv(spark, [(3, 30.0)])
+    ) == 2
+
+
+def test_crash_before_publish_is_invisible_and_retry_commits(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the data write and before the publish leaves no
+    visible version, and an untagged retry commits."""
+    path = str(tmp_path / "crash")
+    store = _range_store(spark, path)
+    raw = os.replace
+
+    def crash(src, dst):
+        if os.path.basename(dst) in ("meta.json", "manifest.json"):
+            raise OSError("simulated crash before publish")
+        return raw(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        store.commit_puts(_kv(spark, [(1, 100.0)]))
+    monkeypatch.setattr(os, "replace", raw)
+    assert store.versions() == [0]
+    assert _as_dict(store.read())[1] == 1.0
+    v = store.commit_puts(_kv(spark, [(1, 100.0)]))
+    assert v == 1 and store.versions() == [0, 1]
+    assert _as_dict(store.read())[1] == 100.0
+
+
+def test_pruned_replay_returns_a_servable_version(spark, tmp_path):
+    """A replay of a tag whose log entry vacuum pruned returns the vacuum
+    floor, which read() serves and which contains the commit."""
+    store = _range_store(spark, str(tmp_path / "replay"))
+    v1 = store.commit_puts(_kv(spark, [(1, 100.0)]), tag="load-1")
+    store.commit_puts(_kv(spark, [(2, 200.0)]))
+    v3 = store.compact()
+    store.vacuum(keep_versions=1, prune_manifest=True)
+    assert v1 not in store.versions()
+    v = store.commit_puts(_kv(spark, [(1, -1.0)]), tag="load-1")
+    assert v == v3
+    assert _as_dict(store.read(v))[1] == 100.0
+    assert store.versions() == [v3]
+
+
+def test_vacuum_reclaims_attempt_dirs_and_ledger_files(
+    spark, tmp_path, monkeypatch
+):
+    """After commit -> compact -> vacuum, the only data directories left
+    are the ones live log entries name, the ledger keeps just its
+    frontier file, and a writer whose base predates the reclaimed ledger
+    files still conflicts."""
+    path = str(tmp_path / "gc")
+    store = _range_store(spark, path)
+    stale = store._meta()
+    raw = os.replace
+
+    def crash(src, dst):
+        if os.path.basename(dst) == "meta.json":
+            raise OSError("simulated crash before publish")
+        return raw(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError):
+        store.commit_puts(_kv(spark, [(1, 5.0)]))  # leaves debris
+    monkeypatch.setattr(os, "replace", raw)
+    store.commit_puts(_kv(spark, [(1, 5.0)]))
+    store.commit_deletes(spark.range(2, 4).withColumnRenamed("id", "k"))
+    vc = store.compact()
+    assert store.vacuum(keep_versions=1) == [0, 1, 2]
+    data_dirs = sorted(
+        d for d in os.listdir(path) if d.startswith("v")
+    )
+    named = json.load(open(os.path.join(path, "meta.json")))["versions"]
+    assert data_dirs == [e["dir"] for e in named if e["v"] >= vc]
+    ledger = [f for f in os.listdir(os.path.join(path, "_versions"))
+              if f.endswith(".json")]
+    assert len(ledger) == 1
+    got = _as_dict(store.read())
+    assert got[1] == 5.0 and 2 not in got and 3 not in got
+    monkeypatch.setattr(VersionedKVStore, "_meta", lambda self: stale)
+    with pytest.raises(ConcurrentWriteConflict):
+        store.commit_puts(_kv(spark, [(9, 9.0)]))
+    monkeypatch.undo()
+    assert _as_dict(store.read()) == got
+
+
+def test_store_in_manifest_format_keeps_working(spark, tmp_path):
+    """A store in the older on-disk format (manifest.json, v<id>/ dirs,
+    pruned_tags, a per-namespace pruned_batch_watermark and
+    batch-<ns>-<id> entry tags) reads every version as before, replays
+    its pruned and unpruned tags as no-ops — including stream
+    redelivery across the upgrade — and publishes meta.json on its next
+    commit."""
+    path = str(tmp_path / "legacy")
+    ns = "0123456789ab"
+
+    def write(df, d):
+        df.write.parquet(os.path.join(path, d))
+
+    write(spark.range(10).select(F.col("id").alias("k"),
+                                 F.col("id").cast("double").alias("v")),
+          "v3/snapshot")
+    write(spark.range(2).select(F.col("id").alias("k"),
+                                F.lit(100.0).alias("v")), "v4/puts")
+    write(spark.range(5, 6).select(F.col("id").alias("k")), "v5/deletes")
+    with open(os.path.join(path, "manifest.json"), "w") as fh:
+        json.dump({
+            "keys": ["k"], "value": "v", "num_partitions": 2,
+            "vacuum_floor": 3,
+            "versions": [
+                {"v": 3, "kind": "snapshot"},
+                {"v": 4, "kind": "puts", "merge": "sum",
+                 "tag": f"batch-{ns}-7"},
+                {"v": 5, "kind": "deletes", "tag": "op-del"},
+            ],
+            "pruned_tags": {"op-load": 1},
+            "pruned_batch_watermark": {
+                ns: {"max_id": 6, "v": 2}, "": {"max_id": 3, "v": 1},
+            },
+        }, fh)
+    store = VersionedKVStore.open(spark, path)
+    base = {k: float(k) for k in range(10)}
+    v4 = {**base, 0: 100.0, 1: 101.0}
+    v5 = {k: x for k, x in v4.items() if k != 5}
+    assert store.versions() == [3, 4, 5]
+    assert (_as_dict(store.read(3)), _as_dict(store.read(4)),
+            _as_dict(store.read())) == (base, v4, v5)
+    with pytest.raises(ValueError, match="vacuum floor"):
+        store.read(1)
+    junk = _kv(spark, [(0, -1.0)])
+    # unpruned tags return their own version, pruned ones the floor
+    assert store.commit_puts(junk, tag=f"batch-{ns}-7") == 4
+    assert store.commit_deletes(junk.select("k"), tag="op-del") == 5
+    for tag in ("op-load", f"batch-{ns}-5", "batch-2"):
+        assert store.commit_puts(junk, tag=tag) == 3
+    # stream redelivery after the upgrade: the checkpoint keeps its
+    # query id, so the namespace is the same
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    (ckpt / "metadata").write_text(json.dumps({"id": ns + "0000"}))
+    store._ckpt_dir = str(ckpt)
+    for batch_id in (7, 6, 2):  # entry tag, ns watermark, "" watermark
+        store.foreach_batch(junk, batch_id)
+    assert store.versions() == [3, 4, 5]
+    assert not os.path.exists(os.path.join(path, "meta.json"))
+    assert _as_dict(store.read()) == v5
+    # a new batch commits, publishing meta.json
+    store.foreach_batch(_kv(spark, [(8, 80.0)]), 8)
+    assert store.versions() == [3, 4, 5, 6]
+    meta = json.load(open(os.path.join(path, "meta.json")))
+    assert meta["versions"][-1]["tag"] == f"{ns}-8"
+    assert _as_dict(store.read()) == {**v5, 8: 80.0}
+    assert _as_dict(store.read(4)) == v4
+    assert store.commit_puts(junk, tag=f"batch-{ns}-6") == 3
