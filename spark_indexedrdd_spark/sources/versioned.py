@@ -82,6 +82,29 @@ from spark_indexedrdd_spark.functions.store_commit import (
 
 _MERGES = {"overwrite": OVERWRITE, "sum": SUM_MERGE}
 _VERSION_DIR = re.compile(r"v(\d+)(-[0-9a-f]+)?")
+# stream tags minted without a checkpoint namespace (unreadable
+# checkpoint metadata, direct foreach_batch calls) are ``batch-<id>``;
+# vacuum folds them into the watermark under this stem, which only
+# _replay reads (tag_is_applied knows namespaced stems only)
+_UNSCOPED = "batch-"
+_UNSCOPED_TAG = re.compile(r"batch-([0-9]+)")
+
+
+def _unscoped_id(tag: "str | None") -> "int | None":
+    hit = _UNSCOPED_TAG.fullmatch(tag) if tag is not None else None
+    return int(hit.group(1)) if hit else None
+
+
+def _fold_unscoped(m: dict) -> None:
+    """Fold the ``batch-<id>`` tags in ``applied`` into the ``batch-``
+    watermark, in place — fold_applied_watermarks' twin for the
+    un-namespaced stream form, so its ledger stays O(1) too."""
+    ids = [_unscoped_id(t) for t in m.get("applied") or []]
+    hits = [i for i in ids if i is not None]
+    if hits:
+        wms = m.setdefault("applied_watermarks", {})
+        wms[_UNSCOPED] = max(hits + [int(wms.get(_UNSCOPED, -1))])
+        m["applied"] = [t for t, i in zip(m["applied"], ids) if i is None]
 
 
 def _mixin_tag(tag: "str | None") -> "str | None":
@@ -96,11 +119,11 @@ def _from_manifest(m: dict) -> dict:
     """The meta of a store in the older ``manifest.json`` format (the
     legacy-read path). Its replay ledger moves to ``applied`` /
     ``applied_watermarks``: namespaced stream tags take the mixin form,
-    a namespace's ``pruned_batch_watermark`` becomes that stem's
-    watermark, and the un-namespaced watermark (its tags ``batch-<id>``
-    are not machine-minted, so no stem covers them) expands to its exact
-    tags. No ``version`` key: the first publish is a fresh commit."""
-    m = dict(m)
+    and each namespace's ``pruned_batch_watermark`` becomes that stem's
+    watermark (the un-namespaced one the ``batch-`` stem's). Stamped
+    ``version`` 0, so two writers racing the first publish conflict
+    like any other pair."""
+    m = dict(m, version=0)
     m["versions"] = [
         {**e, "tag": _mixin_tag(e["tag"])} if "tag" in e else e
         for e in m["versions"]
@@ -109,11 +132,11 @@ def _from_manifest(m: dict) -> dict:
     wms = m.pop("pruned_batch_watermark", None) or {}
     if "max_id" in wms:  # single-namespace form of the oldest stores
         wms = {"": wms}
-    for ns, wm in wms.items():
-        if ns:
-            m.setdefault("applied_watermarks", {})[f"{ns}-"] = int(wm["max_id"])
-        else:
-            applied += [f"batch-{i}" for i in range(int(wm["max_id"]) + 1)]
+    if wms:
+        m["applied_watermarks"] = {
+            f"{ns}-" if ns else _UNSCOPED: int(wm["max_id"])
+            for ns, wm in wms.items()
+        }
     if applied:
         m["applied"] = applied
     return m
@@ -171,6 +194,7 @@ class VersionedKVStore(StreamTagMixin):
             "value": idf._single_value(),
             "num_partitions": idf.num_partitions,
             "versions": [],
+            "version": 0,  # a racing init conflicts instead of replacing
         }
         store._append(m, "snapshot", idf.df)
         return store
@@ -195,7 +219,11 @@ class VersionedKVStore(StreamTagMixin):
         for e in m["versions"]:
             if e.get("tag") == tag:
                 return e["v"]
-        if tag_is_applied(m, tag):
+        wm = (m.get("applied_watermarks") or {}).get(_UNSCOPED)
+        bid = _unscoped_id(tag)
+        if tag_is_applied(m, tag) or (
+            bid is not None and wm is not None and bid <= int(wm)
+        ):
             return int(m.get("vacuum_floor", 0))
         return None
 
@@ -347,13 +375,14 @@ class VersionedKVStore(StreamTagMixin):
         then a compaction every ``compact_every`` deltas."""
         if not batch_df.take(1):
             return
-        # cross-upgrade guard: runs before StreamTagMixin tagged this
-        # batch 'batch-<id>' — its redelivery must stay a no-op
-        if self._replay(self._meta(), f"batch-{batch_id}") is not None:
+        tag = self._stream_tag(str(batch_id))
+        if not self._ns:
+            tag = f"batch-{batch_id}"  # the un-namespaced stream form
+        elif self._replay(self._meta(), f"batch-{batch_id}") is not None:
+            # cross-upgrade guard: a run before StreamTagMixin committed
+            # this batch un-namespaced — its redelivery stays a no-op
             return
-        self.commit_puts(
-            batch_df, merge=self._merge, tag=self._stream_tag(str(batch_id))
-        )
+        self.commit_puts(batch_df, merge=self._merge, tag=tag)
         n_deltas = sum(
             1 for e in self._meta()["versions"] if e["kind"] != "snapshot"
         )
@@ -392,8 +421,9 @@ class VersionedKVStore(StreamTagMixin):
         micro-batch commits leaves a ~10^5-entry log parsed on every
         read. Their tags move to the replay ledger (``applied``), where
         stream tags fold into one watermark per checkpoint namespace
-        (``fold_applied_watermarks``), so redelivery of a pruned commit
-        stays a no-op. Below-floor reads refuse with the SAME vacuum
+        (``fold_applied_watermarks``; the un-namespaced ``batch-<id>``
+        form into one more), so redelivery of a pruned commit stays a
+        no-op. Below-floor reads refuse with the SAME vacuum
         message either way.
 
         Returns the reclaimed version ids."""
@@ -414,6 +444,7 @@ class VersionedKVStore(StreamTagMixin):
                     e["tag"] for e in entries if e["v"] < floor and "tag" in e
                 ]
                 fold_applied_watermarks(m)
+                _fold_unscoped(m)
                 m["versions"] = [e for e in entries if e["v"] >= floor]
             commit_meta(self.path, m)  # <-- refusal publishes before reclaim
         live = {self._dir(e) for e in m["versions"] if e["v"] >= floor}

@@ -396,22 +396,25 @@ def test_prune_manifest_keeps_tagged_replay_idempotent(store, spark):
 
 
 @pytest.mark.slow
-def test_pruned_replay_ledger_is_bounded(store, spark):
+@pytest.mark.parametrize(
+    "stem", ["batch-", "0123456789ab-"], ids=["unscoped", "namespaced"]
+)
+def test_pruned_replay_ledger_is_bounded(store, spark, stem):
     """r12 ADVICE: the replay ledger must not grow one entry per pruned
     tagged commit FOREVER — a year of micro-batches would leave an
-    O(commits) list parsed on every meta read. Checkpoint-namespaced
-    stream tags must compact into one watermark across repeated prune
-    cycles, while operator tags (human cadence) keep exact entries."""
+    O(commits) list parsed on every meta read. Stream tags — the
+    un-namespaced 'batch-<id>' form and the checkpoint-namespaced one —
+    must compact into one watermark across repeated prune cycles, while
+    operator tags (human cadence) keep exact entries."""
     import json as _json
     import os as _os
 
     ups = lambda v: spark.createDataFrame([(1, v)], "k long, v double")  # noqa: E731
     op_v = store.commit_puts(ups(5.0), tag="initial-load")
     n_batches = 12
-    ns = "0123456789ab"  # a checkpoint namespace (StreamTagMixin form)
     batch_vs = {}
     for i in range(n_batches):
-        batch_vs[i] = store.commit_puts(ups(float(i)), tag=f"{ns}-{i}")
+        batch_vs[i] = store.commit_puts(ups(float(i)), tag=f"{stem}{i}")
         if i % 4 == 3:
             store.compact()
             store.vacuum(keep_versions=1, prune_manifest=True)
@@ -421,14 +424,14 @@ def test_pruned_replay_ledger_is_bounded(store, spark):
     # exact list holds only the operator tag — NOT one entry per batch
     assert set(m.get("applied", [])) == {"initial-load"}
     # the watermark is a per-checkpoint-namespace map
-    wm = m["applied_watermarks"][f"{ns}-"]
+    wm = m["applied_watermarks"][stem]
     pruned_ids = [i for i in batch_vs if batch_vs[i] < m["vacuum_floor"]]
     assert int(wm) == max(pruned_ids)
     # every pruned batch id replays as a no-op through the watermark,
     # returning the vacuum floor
     pre = _as_dict(store.read())
     for i in pruned_ids:
-        assert store.commit_puts(ups(-1.0), tag=f"{ns}-{i}") == m["vacuum_floor"]
+        assert store.commit_puts(ups(-1.0), tag=f"{stem}{i}") == m["vacuum_floor"]
     # the pruned operator tag replays as a no-op too
     assert op_v < m["vacuum_floor"]
     assert store.commit_puts(ups(-1.0), tag="initial-load") == m["vacuum_floor"]
@@ -503,7 +506,7 @@ def test_cow_lifecycle_model_with_pruning(spark, tmp_path_factory, ops):
             # batch_put uses stream_ingest's monotonic tag form, whose
             # pruned-replay ledger is the O(1) watermark rather than
             # the exact tag list
-            tag = f"0123456789ab-{n}" if op == "batch_put" else f"p{n}"
+            tag = f"batch-{n}" if op == "batch_put" else f"p{n}"
             df = spark.createDataFrame(
                 [(n % 7, 1000.0 + n), (100 + n, float(n))],
                 "k long, v double",
@@ -580,18 +583,59 @@ def _range_store(spark, path, n=10):
     return VersionedKVStore.init(idf, path)
 
 
-def test_racing_writers_one_conflicts_none_lost(spark, tmp_path):
-    """Two writers read the log before either publishes: exactly one
-    commit raises ConcurrentWriteConflict, the winner's rows read back,
-    and no version id is listed twice."""
+def _manifest_store(spark, path, ns, unscoped_max_id=3):
+    """A store in the older on-disk format, written by hand: manifest.json,
+    v<id>/ dirs, pruned_tags, a per-namespace pruned_batch_watermark and
+    batch-<ns>-<id> entry tags. Versions 3..5; vacuum floor 3."""
+
+    def write(df, d):
+        df.write.parquet(os.path.join(path, d))
+
+    write(spark.range(10).select(F.col("id").alias("k"),
+                                 F.col("id").cast("double").alias("v")),
+          "v3/snapshot")
+    write(spark.range(2).select(F.col("id").alias("k"),
+                                F.lit(100.0).alias("v")), "v4/puts")
+    write(spark.range(5, 6).select(F.col("id").alias("k")), "v5/deletes")
+    with open(os.path.join(path, "manifest.json"), "w") as fh:
+        json.dump({
+            "keys": ["k"], "value": "v", "num_partitions": 2,
+            "vacuum_floor": 3,
+            "versions": [
+                {"v": 3, "kind": "snapshot"},
+                {"v": 4, "kind": "puts", "merge": "sum",
+                 "tag": f"batch-{ns}-7"},
+                {"v": 5, "kind": "deletes", "tag": "op-del"},
+            ],
+            "pruned_tags": {"op-load": 1},
+            "pruned_batch_watermark": {
+                ns: {"max_id": 6, "v": 2},
+                "": {"max_id": unscoped_max_id, "v": 1},
+            },
+        }, fh)
+
+
+@pytest.mark.parametrize("case", ["commit", "manifest_commit", "init"])
+def test_racing_writers_one_conflicts_none_lost(spark, tmp_path, case):
+    """Two writers read the log before either publishes — two commits on
+    one store, the first two commits on a manifest.json-format store, or
+    two inits of one path: exactly one raises ConcurrentWriteConflict,
+    the winner's rows read back, and no version id is listed twice."""
     import threading
 
     from pyspark.sql.readwriter import DataFrameWriter
 
     path = str(tmp_path / "race")
-    _range_store(spark, path)
-    a = VersionedKVStore.open(spark, path)
-    b = VersionedKVStore.open(spark, path)
+    if case == "commit":
+        _range_store(spark, path)
+    elif case == "manifest_commit":
+        _manifest_store(spark, path, "0123456789ab")
+    if case == "init":
+        pre, vs0, stores = {}, [], {}
+    else:
+        pre = _as_dict(VersionedKVStore.open(spark, path).read())
+        vs0 = VersionedKVStore.open(spark, path).versions()
+        stores = {n: VersionedKVStore.open(spark, path) for n in "ab"}
     # each commit reads the log, then writes its data: holding both data
     # writes at a barrier means both logs were read before either publish
     barrier = threading.Barrier(2, timeout=120)
@@ -601,20 +645,25 @@ def test_racing_writers_one_conflicts_none_lost(spark, tmp_path):
         barrier.wait()
         return raw(self, *args, **kw)
 
+    rows = {"a": (1, 10.0), "b": (2, 20.0)}
     out = {}
 
-    def commit(name, store, row):
+    def commit(name):
+        df = _kv(spark, [rows[name]])
         try:
-            out[name] = store.commit_puts(_kv(spark, [row]))
+            if case == "init":
+                idf = IndexedDataFrame.from_unique(
+                    df, "k", num_partitions=2, cache=False
+                )
+                out[name] = VersionedKVStore.init(idf, path).versions()[-1]
+            else:
+                out[name] = stores[name].commit_puts(df)
         except ConcurrentWriteConflict as e:
             out[name] = e
 
     DataFrameWriter.parquet = held
     try:
-        ts = [
-            threading.Thread(target=commit, args=("a", a, (1, 10.0))),
-            threading.Thread(target=commit, args=("b", b, (2, 20.0))),
-        ]
+        ts = [threading.Thread(target=commit, args=(n,)) for n in "ab"]
         for t in ts:
             t.start()
         for t in ts:
@@ -624,18 +673,18 @@ def test_racing_writers_one_conflicts_none_lost(spark, tmp_path):
     lost = [n for n, r in out.items() if isinstance(r, ConcurrentWriteConflict)]
     assert len(lost) == 1, out
     won = "b" if lost == ["a"] else "a"
-    assert out[won] == 1
-    vs = a.versions()
-    assert vs == sorted(set(vs)) == [0, 1]
-    got = _as_dict(a.read())
-    if won == "a":
-        assert got[1] == 10.0 and got[2] == 2.0
-    else:
-        assert got[2] == 20.0 and got[1] == 1.0
-    # the loser's retry lands on top of the winner
-    assert (a if lost == ["a"] else b).commit_puts(
-        _kv(spark, [(3, 30.0)])
-    ) == 2
+    v_won = vs0[-1] + 1 if vs0 else 0
+    assert out[won] == v_won
+    store = VersionedKVStore.open(spark, path)
+    vs = store.versions()
+    assert vs == sorted(set(vs)) == vs0 + [v_won]
+    k, x = rows[won]
+    assert _as_dict(store.read()) == {**pre, k: x}
+    if case != "init":
+        # the loser's retry lands on top of the winner
+        assert stores[lost[0]].commit_puts(
+            _kv(spark, [(3, 30.0)])
+        ) == v_won + 1
 
 
 def test_crash_before_publish_is_invisible_and_retry_commits(
@@ -726,34 +775,11 @@ def test_store_in_manifest_format_keeps_working(spark, tmp_path):
     batch-<ns>-<id> entry tags) reads every version as before, replays
     its pruned and unpruned tags as no-ops — including stream
     redelivery across the upgrade — and publishes meta.json on its next
-    commit."""
+    commit, with a replay ledger that does not grow with the pruned
+    batch ids."""
     path = str(tmp_path / "legacy")
     ns = "0123456789ab"
-
-    def write(df, d):
-        df.write.parquet(os.path.join(path, d))
-
-    write(spark.range(10).select(F.col("id").alias("k"),
-                                 F.col("id").cast("double").alias("v")),
-          "v3/snapshot")
-    write(spark.range(2).select(F.col("id").alias("k"),
-                                F.lit(100.0).alias("v")), "v4/puts")
-    write(spark.range(5, 6).select(F.col("id").alias("k")), "v5/deletes")
-    with open(os.path.join(path, "manifest.json"), "w") as fh:
-        json.dump({
-            "keys": ["k"], "value": "v", "num_partitions": 2,
-            "vacuum_floor": 3,
-            "versions": [
-                {"v": 3, "kind": "snapshot"},
-                {"v": 4, "kind": "puts", "merge": "sum",
-                 "tag": f"batch-{ns}-7"},
-                {"v": 5, "kind": "deletes", "tag": "op-del"},
-            ],
-            "pruned_tags": {"op-load": 1},
-            "pruned_batch_watermark": {
-                ns: {"max_id": 6, "v": 2}, "": {"max_id": 3, "v": 1},
-            },
-        }, fh)
+    _manifest_store(spark, path, ns, unscoped_max_id=10_000)
     store = VersionedKVStore.open(spark, path)
     base = {k: float(k) for k in range(10)}
     v4 = {**base, 0: 100.0, 1: 101.0}
@@ -769,8 +795,10 @@ def test_store_in_manifest_format_keeps_working(spark, tmp_path):
     assert store.commit_deletes(junk.select("k"), tag="op-del") == 5
     for tag in ("op-load", f"batch-{ns}-5", "batch-2"):
         assert store.commit_puts(junk, tag=tag) == 3
-    # stream redelivery after the upgrade: the checkpoint keeps its
-    # query id, so the namespace is the same
+    # stream redelivery after the upgrade: a run with no checkpoint
+    # namespace re-sends an un-namespaced id ...
+    VersionedKVStore.open(spark, path).foreach_batch(junk, 9_999)
+    # ... and a namespaced run keeps its checkpoint's query id
     ckpt = tmp_path / "ckpt"
     ckpt.mkdir()
     (ckpt / "metadata").write_text(json.dumps({"id": ns + "0000"}))
@@ -780,11 +808,35 @@ def test_store_in_manifest_format_keeps_working(spark, tmp_path):
     assert store.versions() == [3, 4, 5]
     assert not os.path.exists(os.path.join(path, "meta.json"))
     assert _as_dict(store.read()) == v5
-    # a new batch commits, publishing meta.json
-    store.foreach_batch(_kv(spark, [(8, 80.0)]), 8)
+    # a new batch commits, publishing meta.json (past the un-namespaced
+    # watermark, which the cross-upgrade guard checks for every id)
+    store.foreach_batch(_kv(spark, [(8, 80.0)]), 10_001)
     assert store.versions() == [3, 4, 5, 6]
     meta = json.load(open(os.path.join(path, "meta.json")))
-    assert meta["versions"][-1]["tag"] == f"{ns}-8"
+    assert meta["versions"][-1]["tag"] == f"{ns}-10001"
+    assert meta["applied"] == ["op-load"]
+    assert meta["applied_watermarks"] == {f"{ns}-": 6, "batch-": 10_000}
     assert _as_dict(store.read()) == {**v5, 8: 80.0}
     assert _as_dict(store.read(4)) == v4
     assert store.commit_puts(junk, tag=f"batch-{ns}-6") == 3
+
+
+def test_unnamespaced_stream_batches_fold_into_one_watermark(spark, tmp_path):
+    """foreach_batch without a readable checkpoint namespace tags its
+    commits 'batch-<id>'; a pruning vacuum folds them into the single
+    'batch-' watermark, and their redelivery stays a no-op."""
+    store = _range_store(spark, str(tmp_path / "unscoped"))
+    for bid in range(3):
+        store.foreach_batch(_kv(spark, [(bid, 100.0 + bid)]), bid)
+    assert [e.get("tag") for e in store._meta()["versions"]] == [
+        None, "batch-0", "batch-1", "batch-2",
+    ]
+    floor = store.compact()
+    store.vacuum(keep_versions=1, prune_manifest=True)
+    m = store._meta()
+    assert m.get("applied", []) == []
+    assert m["applied_watermarks"] == {"batch-": 2}
+    pre = _as_dict(store.read())
+    store.foreach_batch(_kv(spark, [(1, -1.0)]), 1)
+    assert store.versions() == [floor]
+    assert _as_dict(store.read()) == pre
