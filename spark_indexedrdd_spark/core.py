@@ -15,9 +15,12 @@ This is the PySpark-native re-expression of the reference's
    reference's zero-shuffle ``zipIndexedRDDPartitions`` path
    (IndexedRDD.scala:185-198);
 3. **a cached columnar form** — ``.cache()`` stands in for the
-   per-partition ART index (PARTPartition.scala:26-40): point reads are
-   in-memory columnar filters with short-circuit scan, and the optional
-   point index attached by ``with_point_index()`` (``operators/point.py``)
+   per-partition ART index (PARTPartition.scala:26-40). An un-indexed
+   point read runs one JVM job on one of two routes: a single-column
+   ``key IN (...)`` filter with short-circuit scan, or a left semi-join
+   against the key batch for composite keys, literals the IN renderer
+   refuses and batches over 8192 keys. The optional point index
+   attached by ``with_point_index()`` (``operators/point.py``)
    reproduces the touch-only-owning-partitions property of multiget
    (IndexedRDD.scala:79-94).
 
@@ -93,10 +96,11 @@ _SQL_SAFE_STR = __import__("re").compile(r"[^'\"\\\x00-\x1f`]*\Z")
 def _sql_literal(v: Any) -> str | None:
     """Conservative SQL-literal rendering for IN-list construction.
     Returns None for anything that can't be inlined verbatim-safely
-    (quotes/backslashes/control chars, NaN/inf) — the caller then falls
-    back to the Column ``isin`` path. Exists because building a Column
-    ``isin`` does one py4j round trip PER literal (~0.6ms each — 0.6s
-    for a 1k-key multiget); one parsed SQL string costs ~3ms total."""
+    (quotes/backslashes/control chars, NaN/inf, Decimal, timestamps) —
+    the multiget batch then takes the semi-join instead. The IN list is
+    one parsed SQL string because a Column membership predicate does
+    one py4j round trip PER literal (~0.6ms each — 0.6s for a 1k-key
+    multiget); the parsed string costs ~3ms total."""
     if isinstance(v, bool):
         return "true" if v else "false"
     if isinstance(v, int):
@@ -426,10 +430,20 @@ class IndexedDataFrame:
     def multiget(self, ks: Iterable[Any]) -> dict:
         """Batch point lookup (reference IndexedRDD.scala:79-94).
 
-        Filter + collect on the cached columnar form; Catalyst
-        short-circuits non-matching batches via in-memory column stats.
+        One JVM job over the cached columnar form, on one of two routes
+        chosen from the deduplicated batch:
+
+        - a single-column key whose literals all render through
+          :func:`_sql_literal`, at most 8192 of them: ``key IN (...)``
+          filter + collect (Catalyst short-circuits non-matching batches
+          via in-memory column stats);
+        - any other batch (composite keys, quotes, NaN, ``Decimal``,
+          timestamps, larger batches): left semi-join against the batch
+          as a local relation, which the planner broadcasts.
+
         For the strict touch-only-owning-partitions behavior on huge
-        cached indexes, attach ``with_point_index()``.
+        cached indexes, attach ``with_point_index()``; mutated versions
+        answer their own puts/deletes from a driver-side overlay first.
         Missing keys are absent from the result (reference :93).
         """
         key_tuples = [self._key_tuple(k) for k in ks]
@@ -486,60 +500,36 @@ class IndexedDataFrame:
                 {k: val for k, val in parent_res.items() if k not in merged_away}
             )
             return out
-        if len(key_tuples) > 8192:
-            # very large batches: a broadcast semi-join beats a giant IN
-            # list (the optimizer's InSet kicks in above ~10 items, so IN
-            # stays fast well into the thousands — measured: isin wins at
-            # 1k keys; the join path is for 10k+ where predicate size and
-            # driver-side literal construction dominate)
-            keys_df = F.broadcast(
-                local_rows_df(
-                    self.df.sparkSession,
-                    key_tuples,
-                    self.df.select(*self.keys).schema,
-                ).dropDuplicates(self.keys)
+        # Two routes. Measured on 1M keys, 8 partitions, local[4],
+        # median of 5: a composite batch rendered as an OR-of-ANDs
+        # filter took 0.7 s at 16 keys and 14 s at 256 (its generated
+        # code grows past 64 KB, so whole-stage codegen is dropped); the
+        # semi-join takes 0.33-0.35 s from 1 to 1024 keys. Single-key IN
+        # vs semi-join: 172 vs 205 ms at 1 key, 214 vs 184 ms at 1024,
+        # 382 vs 206 ms at 4096, 1056 vs 317 ms at 16384.
+        key_tuples = list(dict.fromkeys(key_tuples))
+        cond = self._in_condition(key_tuples)
+        if cond is not None:
+            rows = self.df.where(cond).collect()
+        else:
+            keys_df = local_rows_df(
+                self.df.sparkSession,
+                key_tuples,
+                self.df.select(*self.keys).schema,
             )
             rows = self.df.join(keys_df, on=self.keys, how="left_semi").collect()
-            return self._rows_to_dict(rows)
-        rows = self.df.where(self._in_condition(key_tuples)).collect()
         return self._rows_to_dict(rows)
 
-    def _in_condition(self, key_tuples: list[tuple]) -> Column:
-        """Membership predicate over literal key tuples. Fast path: ONE
-        parsed SQL expression (a py4j call per literal in ``isin`` makes
-        the Column path ~200× slower to build at 1k keys); values the
-        renderer won't inline fall back to the Column construction."""
-        lits = [
-            [_sql_literal(x) for x in t] for t in key_tuples
-        ]
-        if all(all(x is not None for x in t) for t in lits):
-            if len(self.keys) == 1:
-                body = ",".join(t[0] for t in lits)
-                return F.expr(f"`{self.keys[0]}` IN ({body})")
-            conj = " OR ".join(
-                "("
-                + " AND ".join(
-                    f"`{k}` = {x}" for k, x in zip(self.keys, t)
-                )
-                + ")"
-                for t in lits
-            )
-            return F.expr(conj)
-        if len(self.keys) == 1:
-            return F.col(self.keys[0]).isin([t[0] for t in key_tuples])
-        from functools import reduce as _reduce
-        from operator import and_, or_
-
-        return _reduce(
-            or_,
-            [
-                _reduce(
-                    and_,
-                    [F.col(k) == F.lit(x) for k, x in zip(self.keys, t)],
-                )
-                for t in key_tuples
-            ],
-        )
+    def _in_condition(self, key_tuples: list[tuple]) -> Column | None:
+        """``key IN (...)`` as ONE parsed SQL expression, or None when the
+        batch takes the semi-join: a composite key, a literal
+        :func:`_sql_literal` refuses, or more than 8192 keys."""
+        if len(self.keys) != 1 or len(key_tuples) > 8192:
+            return None
+        lits = [_sql_literal(t[0]) for t in key_tuples]
+        if None in lits:
+            return None
+        return F.expr(f"`{self.keys[0]}` IN ({','.join(lits)})")
 
     def _rows_to_dict(self, rows) -> dict:
         single = len(self.value_cols) == 1
@@ -718,14 +708,16 @@ class IndexedDataFrame:
 
     def delete(self, ks: Iterable[Any]) -> "IndexedDataFrame":
         """Functional batch delete (reference IndexedRDD.scala:166-175;
-        kernel PARTPartition.scala:63-69): left anti join. Deleting an
-        absent key is a no-op (IndexedRDDSuite.scala:216)."""
+        kernel PARTPartition.scala:63-69): left anti join against the
+        batch as a local relation, which the planner broadcasts under
+        the auto-broadcast threshold, so the base never moves. Deleting
+        an absent key is a no-op (IndexedRDDSuite.scala:216)."""
         spark = self.df.sparkSession
         rows = [self._key_tuple(k) for k in ks]
         if not rows:
             return self
         dels = local_rows_df(spark, rows, self.df.select(*self.keys).schema)
-        out = self.delete_df(dels, broadcast_deletes=True)
+        out = self.delete_df(dels)
         # deletes are value-independent: point reads of deleted keys are
         # answered driver-side (absent), the rest by the parent
         out._point_parent = self
@@ -733,12 +725,8 @@ class IndexedDataFrame:
         out._point_tombstones = frozenset(rows)
         return out
 
-    def delete_df(
-        self, dels: DataFrame, broadcast_deletes: bool = False
-    ) -> "IndexedDataFrame":
+    def delete_df(self, dels: DataFrame) -> "IndexedDataFrame":
         d = dels.select(*self.keys).dropDuplicates(self.keys)
-        if broadcast_deletes:
-            d = F.broadcast(d)
         return self._derive(self.df.join(d, on=self.keys, how="left_anti"))
 
     # ------------------------------------------------------------------ #

@@ -7,6 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_indexedrdd_spark.core import SUM_MERGE, IndexedDataFrame
+from spark_indexedrdd_spark.localframe import local_rows_df
+from spark_indexedrdd_spark.plans import explain as X
 
 N = 100
 
@@ -222,6 +224,9 @@ def test_delete(idx):
     assert out.get(0) is None
     assert out.count() == N
     assert idx.get(0) == 0  # parent unchanged
+    # the driver batch is a local relation the planner broadcasts
+    plan = X.final_plan_section(X.executed_plan(out.df))
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
 
 
 # --- build semantics ----------------------------------------------------- #
@@ -454,8 +459,10 @@ def test_with_point_index_routes_multiget(idx):
 
 
 def test_multiget_sql_unsafe_string_keys_fall_back(spark):
-    """Keys the SQL-literal renderer refuses (quotes, backslashes) must
-    still resolve via the Column fallback."""
+    """Keys the SQL-literal renderer refuses (quotes, backslashes, NaN)
+    must still resolve, via the semi-join route, with the same answer
+    a Column ``isin`` filter over the batch gives (NaN matches NaN,
+    0.0 matches -0.0)."""
     weird = ["o'brien", 'a"b', "back\\slash", "plain"]
     df = spark.createDataFrame(
         [(w, i) for i, w in enumerate(weird)], "k string, v long"
@@ -464,15 +471,64 @@ def test_multiget_sql_unsafe_string_keys_fall_back(spark):
     got = kv.multiget(weird + ["missing"])
     assert got == {w: i for i, w in enumerate(weird)}
 
-
-def test_multiget_composite_inlined_condition(spark):
-    df = spark.createDataFrame(
-        [(i, f"s{j}", i * 10 + j) for i in range(10) for j in range(3)],
-        "k1 long, k2 string, v long",
+    nan = float("nan")
+    fdf = local_rows_df(
+        spark, [(1.5, 0), (nan, 1), (-0.0, 2), (2.5, 3)], "k double, v long"
     )
-    kv = IndexedDataFrame.build(df, ["k1", "k2"], num_partitions=3)
-    got = kv.multiget([(1, "s0"), (9, "s2"), (4, "nope")])
-    assert got == {(1, "s0"): 10, (9, "s2"): 92}
+    fkv = IndexedDataFrame.build(fdf, "k", num_partitions=2)
+    batch = [1.5, nan, 0.0, -0.0, 9.75]
+
+    def by_repr(d):  # NaN != NaN, so compare keys by repr
+        return {repr(k): v for k, v in d.items()}
+
+    want = {r["k"]: r["v"] for r in fkv.df.where(F.col("k").isin(batch)).collect()}
+    assert len(want) == 3
+    assert by_repr(fkv.multiget(batch)) == by_repr(want)
+
+
+@pytest.mark.parametrize("n_batch", [3, 2000])
+def test_multiget_composite_takes_semi_join(spark, monkeypatch, n_batch):
+    """Composite-key batches are answered by a left semi-join against
+    the batch, never by an OR-of-ANDs filter (which outgrows the 64 KB
+    codegen limit and runs for seconds at a few hundred keys)."""
+    ids = spark.range(2000)
+    kv = IndexedDataFrame.from_unique(
+        ids.select(
+            F.expr("id div 3").alias("k1"),
+            F.concat(F.lit("s"), (F.col("id") % 3).cast("string")).alias("k2"),
+            F.col("id").alias("v"),
+        ),
+        ["k1", "k2"],
+        num_partitions=3,
+    )
+
+    def key(i):
+        return (i // 3, f"s{i % 3}")
+
+    if n_batch == 3:
+        batch = [key(1), key(1802), (4, "nope")]
+        want = {key(1): 1, key(1802): 1802}
+    else:  # half hits, half past the map's last id
+        batch = [key(i) for i in range(0, 4000, 2)]
+        want = {key(i): i for i in range(0, 2000, 2)}
+    assert len(batch) == n_batch
+
+    seen = []
+    frame_cls = type(kv.df)
+    collect = frame_cls.collect
+
+    def spy(self):
+        seen.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    assert kv.multiget(batch) == want
+    monkeypatch.undo()
+    (read,) = seen
+    plan = X.final_plan_section(X.executed_plan(read))
+    assert "LeftSemi" in plan, plan
+    filters = [ln for ln in plan.splitlines() if "Filter" in ln]
+    assert not any(" OR " in ln for ln in filters), filters
 
 
 # --- MERGE INTO sugar --------------------------------------------------- #

@@ -599,22 +599,35 @@ def test_conflict_leaves_loser_dict_unstamped(tmp_path):
 def test_stale_base_conflicts_after_ledger_files_are_reclaimed(tmp_path):
     """Vacuums delete ledger files below the committed frontier; a
     writer whose base is that old must still conflict, not take the
-    freed slot and publish over the winner."""
+    freed slot and publish over the winner. Reclaimed both by hand and
+    end to end by ``vacuum_store(prune_ledger=True)`` on a
+    manifest-pointer store (an empty ``postings/`` root)."""
     import os
 
-    p = str(tmp_path / "reclaimed")
-    SC.commit_meta(p, {"a": 1})
-    stale = SC.read_meta(p)
-    for a in (2, 3):
-        m = SC.read_meta(p)
-        m["a"] = a
-        SC.commit_meta(p, m)
-    for v in (1, 2):
-        os.remove(os.path.join(p, "_versions", f"{v:020d}.json"))
-    stale["a"] = 99
-    with pytest.raises(SC.ConcurrentWriteConflict):
-        SC.commit_meta(p, stale)
-    assert SC.read_meta(p)["a"] == 3 and SC.read_meta(p)["version"] == 3
+    for reclaim in ("os_remove", "vacuum_store"):
+        p = str(tmp_path / reclaim)
+        os.makedirs(os.path.join(p, "postings"))
+        SC.commit_meta(p, {"a": 1, "manifests": []})
+        stale = SC.read_meta(p)
+        for a in (2, 3):
+            m = SC.read_meta(p)
+            m["a"] = a
+            SC.commit_meta(p, m)
+        vdir = os.path.join(p, "_versions")
+        if reclaim == "os_remove":
+            for v in (1, 2):
+                os.remove(os.path.join(vdir, f"{v:020d}.json"))
+        else:
+            out = SC.vacuum_store(p, keep_versions=1, prune_ledger=True)
+            assert out["floor"] == 3 and out["pruned_ledger"] == [1, 2], out
+        assert not any(
+            os.path.exists(os.path.join(vdir, f"{v:020d}.json")) for v in (1, 2)
+        ), reclaim
+        before = SC.read_meta(p)
+        stale["a"] = 99
+        with pytest.raises(SC.ConcurrentWriteConflict):
+            SC.commit_meta(p, stale)
+        assert SC.read_meta(p) == before and before["a"] == 3, reclaim
 
 
 def test_rebuild_reclaims_dead_reservation(tmp_path):
