@@ -14,7 +14,9 @@ This is the PySpark-native re-expression of the reference's
    between co-partitioned IndexedDataFrames — the DataFrame analog of the
    reference's zero-shuffle ``zipIndexedRDDPartitions`` path
    (IndexedRDD.scala:185-198);
-3. **a cached columnar form** — ``.cache()`` stands in for the
+3. **a materialized form** — ``build``/``from_unique`` cache the
+   columnar form and ``reindex()`` checkpoints a version with its lineage
+   cut and its key hash partitioning kept; either stands in for the
    per-partition ART index (PARTPartition.scala:26-40). An un-indexed
    point read runs one JVM job on one of two routes: a single-column
    ``key IN (...)`` filter with short-circuit scan, or a left semi-join
@@ -27,7 +29,9 @@ This is the PySpark-native re-expression of the reference's
 Every mutation (put/multiput/delete/…) is **functional**: it returns a new
 IndexedDataFrame and leaves the parent usable — the reference achieves this
 with O(1) copy-on-write tree snapshots (PARTPartition.scala:53-69); Spark
-gives it for free because DataFrames are immutable plans.
+gives it for free because DataFrames are immutable plans. Each multiput or
+delete nests one join in the plan, so a result 64 ops past its last cut
+comes back through ``reindex()``.
 
 Value-type generality: the reference's opaque ``V`` maps to one or more
 typed value columns (structs/arrays/maps welcome). Merge/join functions are
@@ -42,12 +46,14 @@ through.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable, Iterable, Mapping, Sequence
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spark_indexedrdd_spark.checkpoint import truncate_lineage
 from spark_indexedrdd_spark.localframe import local_rows_df
 
 # (old_value, new_value) -> merged_value, as Column expressions.
@@ -60,6 +66,13 @@ OVERWRITE: MergeFn = lambda old, new: new  # noqa: E731  (reference default: las
 KEEP_OLD: MergeFn = lambda old, new: old  # noqa: E731
 SUM_MERGE: MergeFn = lambda old, new: old + new  # noqa: E731
 IDENTITY: InitFn = lambda new: new  # noqa: E731
+
+# Mutations a multiput/delete result may stack past its last cut before it
+# comes back through reindex(): each one nests a join in the plan, and an
+# un-reindexed chain of 401 overflowed the analyzer's stack.
+_MAX_CHAIN = 64
+# one reindex() at a time switches the session's AQE flag off and back
+_AQE_SWITCH = threading.Lock()
 
 
 def _as_list(x: str | Sequence[str]) -> list[str]:
@@ -283,6 +296,8 @@ class IndexedDataFrame:
         self._point_merge_spec: tuple[Any, str] | None = None
         # optional attached NativeHashPointIndex (with_point_index())
         self._pindex = None
+        # ops derived since the last cut (build or reindex)
+        self._chain = 0
 
     # ------------------------------------------------------------------ #
     # Construction (reference ops 1-2: IndexedRDD.scala:461-486)
@@ -378,7 +393,16 @@ class IndexedDataFrame:
 
     def _derive(self, df: DataFrame) -> "IndexedDataFrame":
         """Wrap a derived plan that preserves key layout + partitioning."""
-        return IndexedDataFrame(df, self.keys, self.num_partitions)
+        out = IndexedDataFrame(df, self.keys, self.num_partitions)
+        out._chain = self._chain + 1
+        return out
+
+    def _mutated(self, df: DataFrame) -> "IndexedDataFrame":
+        """:meth:`_derive` for a multiput/delete result, which comes back
+        through :meth:`reindex` once it is ``_MAX_CHAIN`` ops past its
+        last cut."""
+        out = self._derive(df)
+        return out.reindex() if out._chain >= _MAX_CHAIN else out
 
     def _single_value(self) -> str:
         if len(self.value_cols) != 1:
@@ -614,7 +638,9 @@ class IndexedDataFrame:
             spark, rows, self.df.select(*self.keys, v).schema
         )
         out = self.multiput_df(updates, f=f, z=z)
-        if z is IDENTITY and coerce is not None:
+        # a version the chain bound cut answers from its materialized
+        # form: an overlay would pin the parents the cut dropped
+        if out._chain and z is IDENTITY and coerce is not None:
             # Point-read overlay. Two flavors:
             # - f=OVERWRITE: the merged value IS the driver-supplied value,
             #   so reads are answered entirely from the overlay.
@@ -663,6 +689,7 @@ class IndexedDataFrame:
         Scale: base side is already hash-partitioned on key, so only the
         updates side shuffles. (Full outer joins cannot broadcast a side;
         the SHUFFLE_HASH hint below is the fast path for small batches.)
+        A result 64 ops past its last cut is returned reindexed.
         """
         v = self._single_value()
         up = self._align(updates)
@@ -703,31 +730,32 @@ class IndexedDataFrame:
             .cast(self.df.schema[v].dataType)
             .alias(v)
         )
-        out = joined.select(*self.keys, merged)
-        return self._derive(out)
+        return self._mutated(joined.select(*self.keys, merged))
 
     def delete(self, ks: Iterable[Any]) -> "IndexedDataFrame":
         """Functional batch delete (reference IndexedRDD.scala:166-175;
         kernel PARTPartition.scala:63-69): left anti join against the
         batch as a local relation, which the planner broadcasts under
         the auto-broadcast threshold, so the base never moves. Deleting
-        an absent key is a no-op (IndexedRDDSuite.scala:216)."""
+        an absent key is a no-op (IndexedRDDSuite.scala:216). A result 64
+        ops past its last cut is returned reindexed."""
         spark = self.df.sparkSession
         rows = [self._key_tuple(k) for k in ks]
         if not rows:
             return self
         dels = local_rows_df(spark, rows, self.df.select(*self.keys).schema)
         out = self.delete_df(dels)
-        # deletes are value-independent: point reads of deleted keys are
-        # answered driver-side (absent), the rest by the parent
-        out._point_parent = self
-        out._point_overlay = {}
-        out._point_tombstones = frozenset(rows)
+        if out._chain:
+            # deletes are value-independent: point reads of deleted keys
+            # are answered driver-side (absent), the rest by the parent
+            out._point_parent = self
+            out._point_overlay = {}
+            out._point_tombstones = frozenset(rows)
         return out
 
     def delete_df(self, dels: DataFrame) -> "IndexedDataFrame":
         d = dels.select(*self.keys).dropDuplicates(self.keys)
-        return self._derive(self.df.join(d, on=self.keys, how="left_anti"))
+        return self._mutated(self.df.join(d, on=self.keys, how="left_anti"))
 
     # ------------------------------------------------------------------ #
     # Projection / predicate (ops 9-10)
@@ -936,12 +964,18 @@ class IndexedDataFrame:
         return IndexedDataFrame(agg, self.keys, self.num_partitions)
 
     def reindex(self) -> "IndexedDataFrame":
-        """Force/compact the composed plan (reference IndexedRDD.scala:299-304;
-        LazyPartition.scala:134-135 forces the pending merge). Here:
-        materialize into the cache so downstream ops read columnar bytes
-        instead of re-executing lineage."""
-        out = self.df.repartition(self.num_partitions, *self.keys).cache()
-        out.count()
+        """Materialize this version with its lineage cut (reference
+        IndexedRDD.scala:299-304; LazyPartition.scala:134-135): a
+        ``truncate_lineage`` of the key repartition, planned with AQE off
+        so the ``LogicalRDD`` leaf reports the key hash partitioning."""
+        conf = self.df.sparkSession.conf
+        with _AQE_SWITCH:
+            aqe = conf.get("spark.sql.adaptive.enabled")
+            conf.set("spark.sql.adaptive.enabled", "false")
+            try:
+                out = truncate_lineage(self.df.repartition(self.num_partitions, *self.keys))
+            finally:
+                conf.set("spark.sql.adaptive.enabled", aqe)
         return IndexedDataFrame(out, self.keys, self.num_partitions)
 
     # ------------------------------------------------------------------ #
@@ -955,7 +989,10 @@ class IndexedDataFrame:
         return self
 
     def unpersist(self, blocking: bool = False) -> "IndexedDataFrame":
-        """Release the cached columnar form and any attached point index."""
+        """Release the cached columnar form and any attached point index.
+        A reindexed version's checkpoint blocks stay: versions derived
+        from it still read them, and Spark's ``ContextCleaner`` reclaims
+        them once no such version is reachable."""
         self.df.unpersist(blocking)
         if self._pindex is not None:
             self._pindex.unpersist()

@@ -9,16 +9,12 @@ Each micro-batch:
 1. pre-aggregates the batch to unique keys (map-side combine),
 2. ``multiput_df`` merges it into the current version (shuffled-hash
    full outer: the base never re-shuffles or sorts),
-3. every ``compact_every`` batches, the accumulated join chain is
-   materialized through ``checkpoint.truncate_lineage`` (repartitioned
-   on the keys, so the partitioning contract holds) and the previous
-   compaction's blocks are released (unless ``keep_history`` still
-   serves it; the caller-supplied base is never released) — bounding
-   plan depth and cache footprint exactly like the reference's
-   ``reindex()`` forcing a LazyPartition merge
-   (LazyPartition.scala:134-135). Cutting the lineage keeps planning
-   cost flat: a cached ``reindex()`` would still embed every earlier
-   batch in each later plan.
+3. every ``compact_every`` batches, ``IndexedDataFrame.reindex()``
+   materializes the accumulated join chain (lineage cut, key partitioning
+   kept) and the previous compaction's blocks are released (unless
+   ``keep_history`` still serves it; the caller-supplied base is never
+   released) — bounding plan depth and block footprint like the
+   reference's LazyPartition merge (LazyPartition.scala:134-135).
 
 Versions are retained: ``history[i]`` is the IndexedDataFrame after batch
 i, still queryable (the reference's multi-version README demo). Without
@@ -29,7 +25,7 @@ lineage left once its blocks are released, so hold versions through
 
 from __future__ import annotations
 
-from spark_indexedrdd_spark.checkpoint import release_lineage, truncate_lineage
+from spark_indexedrdd_spark.checkpoint import release_lineage
 from spark_indexedrdd_spark.core import IndexedDataFrame, MergeFn, SUM_MERGE
 
 
@@ -58,13 +54,7 @@ class StreamingKVStore:
         updated = self.current.multiput_df(batch_df, f=self.merge)
         self._batches += 1
         if self._batches % self.compact_every == 0:
-            updated = IndexedDataFrame(
-                truncate_lineage(
-                    updated.df.repartition(updated.num_partitions, *updated.keys)
-                ),
-                updated.keys,
-                updated.num_partitions,
-            )
+            updated = updated.reindex()
             if self._compacted is not None and not self.keep_history:
                 release_lineage(self._compacted.df)
             self._compacted = updated

@@ -3,6 +3,8 @@ suite (reference IndexedRDDSuite.scala:28-218). Same fixtures
 (FIXTURES.md §1): pairs = keys 0..100, v = k, 5 partitions; assertions are
 closed-form sets, order-insensitive (reference compares collect.toSet)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -564,3 +566,106 @@ def test_merge_into_matrix(spark):
     }
     # base untouched (functional semantics)
     assert snap(kv) == {1: 10, 2: 20, 3: 30}
+
+
+# --- reindex: the one materialization (LazyPartition.scala:134-135) ----- #
+
+
+def _plan_size(df) -> int:
+    # expression ids grow across versions; strip them so the figure
+    # counts plan nodes, not digits
+    return len(re.sub(r"#\d+", "#", df._jdf.queryExecution().executedPlan().toString()))
+
+
+def test_reindex_cycles_stay_flat(spark, no_broadcast):
+    """Each reindex() cuts the lineage and keeps the key partitioning:
+    the reindexed plan is one LogicalRDD leaf, and a co-partitioned join
+    neither grows with the cycles before it nor reshuffles either side."""
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    n = 20_000
+    cur = IndexedDataFrame.from_unique(
+        spark.range(n).select(F.col("id").alias("k"), F.col("id").alias("v")),
+        "k", num_partitions=4,
+    )
+    other = IndexedDataFrame.from_unique(
+        spark.range(0, n, 3).select(F.col("id").alias("k"), F.lit(1).cast("long").alias("v")),
+        "k", num_partitions=4,
+    )
+    model = {k: k for k in range(n)}
+    sizes = []
+    for c in range(6):
+        ups = {k: -k for k in range(c * 100, c * 100 + 50)}
+        cur = cur.multiput(ups)
+        model.update(ups)
+        sums = {k: 7 for k in range(c * 100 + 25, c * 100 + 75)} | {n + c: 7}
+        cur = cur.multiput(sums, f=SUM_MERGE)
+        for k, d in sums.items():
+            model[k] = model.get(k, 0) + d
+        dels = list(range(c * 100 + 60, c * 100 + 90))
+        cur = cur.delete(dels)
+        for k in dels:
+            model.pop(k, None)
+        cur = cur.reindex()
+        assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+        assert cur.df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+        joined = cur.inner_join(other, lambda x, y: x + y)
+        assert X.count_live_shuffles(joined.df) == 0, X.final_plan_section(
+            X.executed_plan(joined.df)
+        )
+        sizes.append(_plan_size(joined.df))
+    assert sizes[-1] <= sizes[0], sizes
+    assert {r["k"]: r["v"] for r in cur.collect()} == model
+    probe = [0, 30, 70, 560, 580, n - 1, n + 5, n + 6]
+    assert cur.multiget(probe) == {k: model[k] for k in probe if k in model}
+    # a failing checkpoint job still restores the AQE flag
+    bad = cur.map_values(
+        lambda v: F.when(v.isNotNull(), F.raise_error(F.lit("boom"))).otherwise(v)
+    )
+    with pytest.raises(Exception, match="boom"):
+        bad.reindex()
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+
+
+def test_mutation_chain_depth_is_bounded(spark):
+    """An un-reindexed multiput/delete chain comes back through reindex()
+    every _MAX_CHAIN ops, so its plan never nests deeper than that (an
+    unbounded chain overflowed the analyzer's stack at depth 401)."""
+    from spark_indexedrdd_spark.core import _MAX_CHAIN
+
+    cur = IndexedDataFrame.from_unique(
+        spark.range(1_000).select(F.col("id").alias("k"), F.col("id").alias("v")),
+        "k", num_partitions=4,
+    )
+    model = {k: k for k in range(1_000)}
+    for i in range(70):
+        if i % 2 == 0:
+            cur = cur.multiput({1_000 + i: i})
+            model[1_000 + i] = i
+        else:
+            cur = cur.delete([i])
+            model.pop(i, None)
+    tree = cur.df._jdf.queryExecution().analyzed().treeString()
+    joins = [ln for ln in tree.splitlines() if ln.lstrip(" :+-").startswith("Join ")]
+    assert len(joins) <= _MAX_CHAIN, len(joins)
+    assert {r["k"]: r["v"] for r in cur.collect()} == model
+    probe = [0, 1, 2, 63, 64, 65, 69, 70, 1_000, 1_062, 1_064, 1_068, 1_069]
+    assert cur.multiget(probe) == {k: model[k] for k in probe if k in model}
+
+
+def test_concurrent_reindex_restores_aqe(spark):
+    """reindex() from several threads at once (a streaming store's
+    compaction next to the caller's own) leaves the AQE flag as it was."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    frames = [
+        IndexedDataFrame.from_unique(
+            spark.range(i * 10, i * 10 + 10).select(F.col("id").alias("k"), F.col("id").alias("v")),
+            "k", num_partitions=2, cache=False,
+        )
+        for i in range(6)
+    ]
+    with ThreadPoolExecutor(max_workers=6) as pool:
+        done = list(pool.map(lambda f: f.reindex(), frames, timeout=120))
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    assert [d.count() for d in done] == [10] * 6

@@ -24,16 +24,6 @@ def orders(spark, sf_dir):
     return load_table(spark, sf_dir, "orders")
 
 
-@pytest.fixture()
-def no_broadcast(spark):
-    """Disable auto-broadcast so join-shape assertions exercise the
-    co-partitioning contract rather than tiny-data broadcasting."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
 def test_delete_driver_batch_broadcasts(spark, orders):
     kv = IndexedDataFrame.from_unique(
         orders.select("o_orderkey", "o_totalprice"), "o_orderkey"

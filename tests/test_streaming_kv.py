@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from spark_indexedrdd_spark.checkpoint import release_lineage
 from spark_indexedrdd_spark.core import SUM_MERGE, IndexedDataFrame
+from spark_indexedrdd_spark.plans import explain as X
 from spark_indexedrdd_spark.sources.tables import load_table
 from spark_indexedrdd_spark.streaming.kv_sink import StreamingKVStore
 from spark_indexedrdd_spark.streaming.windows import _as_stream_dir
@@ -100,13 +101,19 @@ def test_compaction_releases_replaced_versions(spark, keep_history):
         v.unpersist()
 
 
-def test_compaction_plan_size_stays_flat(spark):
+def test_compaction_plan_size_stays_flat(spark, no_broadcast):
     """Compaction cuts the lineage: the compacted frame's plan does not
-    grow with the number of batches folded before it."""
+    grow with the number of batches folded before it, and it keeps the
+    key partitioning, so neither a co-partitioned join nor the next
+    merge reshuffles it."""
+    # the session's shuffle partition count: a merge whose updates-side
+    # aggregate shuffles to more partitions than the base has would
+    # re-shuffle the base to match
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     base = IndexedDataFrame.from_unique(
         spark.range(8).select(F.col("id").alias("k"), F.lit(0.0).alias("v")),
         "k",
-        num_partitions=2,
+        num_partitions=n,
         cache=False,
     )
     store = StreamingKVStore(base, merge=SUM_MERGE, compact_every=2)
@@ -123,4 +130,17 @@ def test_compaction_plan_size_stays_flat(spark):
     got = {r["k"]: r["v"] for r in store.current.collect()}
     assert got == {k: float(sum(1 for b in range(20) if b % 8 == k))
                    for k in range(8)}
+    partner = IndexedDataFrame.from_unique(
+        spark.range(0, 8, 2).select(F.col("id").alias("k"), F.lit(1.0).alias("v")),
+        "k",
+        num_partitions=n,
+    )
+    joined = store.current.inner_join(partner, lambda x, y: x + y)
+    assert X.count_live_shuffles(joined.df) == 0
+    batch = spark.range(4, numPartitions=2).select(
+        (F.col("id") * 3).alias("k"), F.lit(1.0).alias("v")
+    )
+    # only the updates side shuffles; the compacted base stays put
+    assert X.count_live_shuffles(store.current.multiput_df(batch, f=SUM_MERGE).df) == 1
+    partner.unpersist()
     release_lineage(store.current.df)
