@@ -13,7 +13,9 @@ This is the PySpark-native re-expression of the reference's
    Catalyst's EnsureRequirements elides the exchange on later key-joins
    between co-partitioned IndexedDataFrames — the DataFrame analog of the
    reference's zero-shuffle ``zipIndexedRDDPartitions`` path
-   (IndexedRDD.scala:185-198);
+   (IndexedRDD.scala:185-198). Keyed folds and delete batches land in
+   that same layout at any ``spark.sql.shuffle.partitions``, so a write
+   shuffles only its batch, never the base;
 3. **a materialized form** — ``build``/``from_unique`` cache the
    columnar form and ``reindex()`` checkpoints a version with its lineage
    cut and its key hash partitioning kept; either stands in for the
@@ -79,8 +81,17 @@ def _as_list(x: str | Sequence[str]) -> list[str]:
     return [x] if isinstance(x, str) else list(x)
 
 
-def _null_safe_fold(f: MergeFn, value: Column, dtype) -> Column:
-    """Aggregate fold of ``value`` with ``f`` that preserves NULL elements.
+def _keyed_fold(
+    df: DataFrame, keys: list[str], n: int, f: MergeFn, value: str
+) -> DataFrame:
+    """Fold column ``value`` of ``df`` per key with ``f``, in the index
+    layout: the frame moves once into ``hashpartitioning(keys, n)`` and
+    the aggregate runs there, so the result needs no further exchange
+    and a join against a base of ``n`` partitions leaves the base where
+    it is (the reference probes update keys into the partitions that
+    already exist, PARTPartition.scala:51-61). A ``collect_list`` fold
+    moves every value across the shuffle anyway, so skipping map-side
+    partial aggregation costs nothing.
 
     ``collect_list`` silently drops NULL elements, so folding the raw
     column would make a NULL value vanish from the reduce. Wrap each value
@@ -89,10 +100,11 @@ def _null_safe_fold(f: MergeFn, value: Column, dtype) -> Column:
     instead of branching on value nullness — the Column analog of the
     reference's Option-based fold (PARTPartition.scala:56-60)."""
     zero = F.struct(
-        F.lit(False).alias("has"), F.lit(None).cast(dtype).alias("v")
+        F.lit(False).alias("has"),
+        F.lit(None).cast(df.schema[value].dataType).alias("v"),
     )
-    return F.reduce(
-        F.collect_list(F.struct(value.alias("v"))),
+    folded = F.reduce(
+        F.collect_list(F.struct(F.col(value).alias("v"))),
         zero,
         lambda acc, x: F.struct(
             F.lit(True).alias("has"),
@@ -101,6 +113,7 @@ def _null_safe_fold(f: MergeFn, value: Column, dtype) -> Column:
             .alias("v"),
         ),
     )["v"]
+    return df.repartition(n, *keys).groupBy(*keys).agg(folded.alias(value))
 
 
 _SQL_SAFE_STR = __import__("re").compile(r"[^'\"\\\x00-\x1f`]*\Z")
@@ -327,15 +340,23 @@ class IndexedDataFrame:
           "last wins".
         - ``merge=fn``: fold all values per key with ``fn`` — requires a
           single value column and an associative+commutative ``fn``
-          (e.g. ``SUM_MERGE``); implemented as a hash aggregate so Spark
-          does map-side partial aggregation (scale: no single hot reducer).
+          (e.g. ``SUM_MERGE``); the rows fold in the index layout
+          (:func:`_keyed_fold`).
+
+        ``merge=None`` keeps map-side partial aggregation and ends in
+        ``repartition(n, *keys)``, which Spark drops when the aggregate
+        already landed in that layout.
         """
         key_list = _as_list(keys)
         n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
         n = int(n)
         value_cols = [c for c in df.columns if c not in key_list]
 
-        if merge is None:
+        if merge is not None:
+            if len(value_cols) != 1:
+                raise ValueError("merge fn requires exactly one value column")
+            out = _keyed_fold(df, key_list, n, merge, value_cols[0])
+        else:
             ord_c = order_col or (value_cols[0] if value_cols else None)
             if ord_c is None:  # key-only frame: plain distinct
                 deduped = df.dropDuplicates(key_list)
@@ -353,15 +374,7 @@ class IndexedDataFrame:
                 deduped = df.groupBy(*key_list).agg(winner).select(
                     *key_list, *[F.col("__w")[c].alias(c) for c in value_cols]
                 )
-        else:
-            if len(value_cols) != 1:
-                raise ValueError("merge fn requires exactly one value column")
-            v = value_cols[0]
-            deduped = df.groupBy(*key_list).agg(
-                _null_safe_fold(merge, F.col(v), df.schema[v].dataType).alias(v)
-            )
-
-        out = deduped.repartition(n, *key_list)
+            out = deduped.repartition(n, *key_list)
         if cache:
             out = out.cache()
         return cls(out, key_list, n)
@@ -614,9 +627,9 @@ class IndexedDataFrame:
         (reference IndexedRDD.scala:105-153; kernel PARTPartition.scala:51-61).
 
         Existing key -> ``f(old, new)``; absent key -> ``z(new)``.
-        The driver map becomes a tiny DataFrame that is **broadcast** into
-        the merge join — at cluster scale the base never moves and no
-        shuffle happens at all.
+        The driver map becomes a local relation that :meth:`multiput_df`
+        folds into the index layout: only the batch shuffles, the base
+        never moves.
 
         Value coercion is STRICT: values must match the value column's
         kind. Cross-kind conversions raise ``TypeError`` (bool into a
@@ -684,12 +697,12 @@ class IndexedDataFrame:
         - only base    -> old value unchanged
         - only updates -> ``z(new)``
 
-        Updates may carry duplicate keys; they are pre-folded with ``f``
-        so the join side has unique keys (map-side partial aggregation).
-        Scale: base side is already hash-partitioned on key, so only the
-        updates side shuffles. (Full outer joins cannot broadcast a side;
-        the SHUFFLE_HASH hint below is the fast path for small batches.)
-        A result 64 ops past its last cut is returned reindexed.
+        Updates may carry duplicate keys; they are folded with ``f`` in
+        the index layout (:func:`_keyed_fold`), so only the updates side
+        shuffles, at any partition count. (Full outer joins cannot
+        broadcast a side; the SHUFFLE_HASH hint below is the fast path
+        for small batches.) A result 64 ops past its last cut is
+        returned reindexed.
         """
         v = self._single_value()
         up = self._align(updates)
@@ -698,14 +711,9 @@ class IndexedDataFrame:
             raise ValueError(f"updates must have one value column, got {uv}")
         up = up.withColumnRenamed(uv[0], "__u") if uv[0] != "__u" else up
         # Fold duplicate update keys with f (same contract as the kernel's
-        # sequential probe-insert loop, PARTPartition.scala:56-60).
-        # NULL update values are legal (the reference's V is an arbitrary
-        # Option-wrapped value): wrap each value in a struct so
-        # collect_list can't drop NULL elements, and thread an explicit
-        # `has` flag through the fold instead of branching on value
-        # nullness.
-        folded = _null_safe_fold(f, F.col("__u"), up.schema["__u"].dataType)
-        up = up.groupBy(*self.keys).agg(folded.alias("__u")).withColumn(
+        # sequential probe-insert loop, PARTPartition.scala:56-60); NULL
+        # update values are legal and survive the fold.
+        up = _keyed_fold(up, self.keys, self.num_partitions, f, "__u").withColumn(
             "__has_u", F.lit(True)
         )
         # Presence marker on the base too: a key whose base value is NULL
@@ -736,8 +744,9 @@ class IndexedDataFrame:
         """Functional batch delete (reference IndexedRDD.scala:166-175;
         kernel PARTPartition.scala:63-69): left anti join against the
         batch as a local relation, which the planner broadcasts under
-        the auto-broadcast threshold, so the base never moves. Deleting
-        an absent key is a no-op (IndexedRDDSuite.scala:216). A result 64
+        the auto-broadcast threshold; above it :meth:`delete_df` has put
+        the batch in the index layout, so the base never moves. Deleting an
+        absent key is a no-op (IndexedRDDSuite.scala:216). A result 64
         ops past its last cut is returned reindexed."""
         spark = self.df.sparkSession
         rows = [self._key_tuple(k) for k in ks]
@@ -754,7 +763,8 @@ class IndexedDataFrame:
         return out
 
     def delete_df(self, dels: DataFrame) -> "IndexedDataFrame":
-        d = dels.select(*self.keys).dropDuplicates(self.keys)
+        d = dels.select(*self.keys).repartition(self.num_partitions, *self.keys)
+        d = d.dropDuplicates(self.keys)
         return self._mutated(self.df.join(d, on=self.keys, how="left_anti"))
 
     # ------------------------------------------------------------------ #
@@ -926,42 +936,31 @@ class IndexedDataFrame:
         """Keyed reduce aligned to this index's partitioning (reference
         IndexedRDD.scala:293-297; kernel PARTPartition.scala:201-203).
         Result keys come purely from ``elems`` — keys absent from the
-        index survive (IndexedRDDSuite.scala:179-181). Implemented as a
-        hash aggregate (partial + final — Catalyst's map-side combine),
-        shuffled straight into this index's partition count."""
+        index survive (IndexedRDDSuite.scala:179-181). The rows move
+        once into this index's layout and fold there
+        (:func:`_keyed_fold`): one exchange at any partition count."""
         ev = [c for c in elems.columns if c not in self.keys]
         if len(ev) != 1:
             raise ValueError(f"elems must have one value column, got {ev}")
-        v = ev[0]
-        agg = elems.groupBy(*self.keys).agg(
-            _null_safe_fold(
-                reduce_fn, F.col(v), elems.schema[v].dataType
-            ).alias(v)
-        )
-        out = agg.repartition(self.num_partitions, *self.keys)
+        out = _keyed_fold(elems, self.keys, self.num_partitions, reduce_fn, ev[0])
         return IndexedDataFrame(out, self.keys, self.num_partitions)
 
     def aggregate_using_index_expr(
         self, elems: DataFrame, agg_expr: Column, alias: str = "v"
     ) -> "IndexedDataFrame":
         """Fast path of :meth:`aggregate_using_index` when the reduce is a
-        native aggregate (sum/min/max/…): whole-stage-codegen hash agg,
-        no collect_list materialization. Prefer this at scale.
+        native aggregate (sum/min/max/…): whole-stage-codegen hash agg
+        with map-side partial aggregation, no collect_list
+        materialization. Prefer this at scale.
 
+        The aggregate ends in ``repartition(num_partitions, *keys)``.
         When the index's partition count equals the session's
-        ``spark.sql.shuffle.partitions``, the hash-agg's own final
-        exchange IS the index layout (HashPartitioning over the same key
-        expressions, same murmur3, same count), so the explicit
-        repartition is skipped — one exchange instead of two. Measured:
-        iterative callers (pagerank's per-iteration combine) were paying
-        the second, fully redundant shuffle every iteration."""
+        ``spark.sql.shuffle.partitions``, the aggregate's own exchange
+        already is that layout and Spark drops the repartition: one
+        exchange; otherwise two."""
         agg = elems.groupBy(*self.keys).agg(agg_expr.alias(alias))
-        n_shuffle = int(
-            elems.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        if n_shuffle != self.num_partitions:
-            agg = agg.repartition(self.num_partitions, *self.keys)
-        return IndexedDataFrame(agg, self.keys, self.num_partitions)
+        out = agg.repartition(self.num_partitions, *self.keys)
+        return IndexedDataFrame(out, self.keys, self.num_partitions)
 
     def reindex(self) -> "IndexedDataFrame":
         """Materialize this version with its lineage cut (reference
@@ -1038,18 +1037,15 @@ def merge_into(
         raise ValueError(f"updates must have one value column, got {uv}")
 
     if when_matched == "delete":
-        keys_only = up.select(*base.keys).dropDuplicates(base.keys)
-        deleted = base.delete_df(keys_only)
+        deleted = base.delete_df(up)
         if when_not_matched == "insert":
             # matched keys leave, unmatched updates enter: union the
             # anti-joined updates in (they can't collide with survivors)
             incoming = up.join(
                 base.df.select(*base.keys), on=base.keys, how="left_anti"
             ).withColumnRenamed(uv[0], v)
-            out = deleted.df.unionByName(incoming)
-            n = base.num_partitions
-            return IndexedDataFrame(
-                out.repartition(n, *base.keys).cache(), base.keys, n
+            return IndexedDataFrame.from_unique(
+                deleted.df.unionByName(incoming), base.keys, base.num_partitions
             )
         return deleted
 

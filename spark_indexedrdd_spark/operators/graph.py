@@ -196,9 +196,7 @@ def pagerank(
             and (i + 1) % checkpoint_every == 0
             and (i + 1) < iterations
         ):
-            ranks = IndexedDataFrame(
-                ranks.df.transform(truncate_lineage), ["id"], n
-            )
+            ranks = ranks.reindex()
     # Materialize the final state and release the edge cache — an
     # iterative job's terminal state is checkpointed anyway, and a
     # lazily-returned plan would pin the cached edges forever (the
@@ -391,9 +389,7 @@ def label_propagation(
             and (i + 1) % checkpoint_every == 0
             and (i + 1) < iterations
         ):
-            labels = IndexedDataFrame(
-                labels.df.transform(truncate_lineage), ["id"], n
-            )
+            labels = labels.reindex()
     out = labels.df.select("id", F.col("label").alias("community"))
     out = out.transform(truncate_lineage)
     e.unpersist()
@@ -546,9 +542,7 @@ def shortest_hops(
                 and (i + 1) % checkpoint_every == 0
                 and (i + 1) < iterations
             ):
-                dist = IndexedDataFrame(
-                    dist.df.transform(truncate_lineage), ["id"], n
-                )
+                dist = dist.reindex()
     out = dist.df.select("id", F.col("hops").cast("int")).transform(truncate_lineage)
     e.unpersist()
     return out

@@ -1,9 +1,11 @@
 """Driver-environment simulation: the correctness harness runs entry()
 and queries() in ITS OWN SparkSession — bone-stock config, possibly a
 non-UTC timezone. This regression test runs a representative slice of
-the contract in a subprocess with exactly that shape, so session-config
+the contract in a subprocess with that session shape, so session-config
 dependencies (legacy parquet flags, timezone-sensitive casts) can't
-creep back in."""
+creep back in. The core count is deliberately not part of the
+simulated shape: results are core-count independent by contract, and
+the subprocess uses ``local[6]`` whatever core count the harness uses."""
 
 import os
 import subprocess

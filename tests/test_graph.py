@@ -77,6 +77,28 @@ def test_pagerank_checkpoint_equivalence(spark):
     assert plain == cut
 
 
+def test_pagerank_cut_keeps_key_layout(spark, no_broadcast, monkeypatch):
+    """A lineage cut keeps the rank state's key hash partitioning, so the
+    message join of the iteration after a cut shuffles nothing: the
+    edges are cached by src and the cut state is already laid out by id."""
+    from spark_indexedrdd_spark.core import IndexedDataFrame
+    from spark_indexedrdd_spark.plans import explain as X
+
+    combine = IndexedDataFrame.aggregate_using_index_expr
+    live = []
+
+    def spy(self, elems, agg_expr, alias="v"):
+        live.append(X.count_live_shuffles(elems))  # elems = the message join
+        return combine(self, elems, agg_expr, alias)
+
+    monkeypatch.setattr(IndexedDataFrame, "aggregate_using_index_expr", spy)
+    edges = spark.createDataFrame(TOY, "src long, dst long")
+    got = pagerank(edges, iterations=4, checkpoint_every=2).collect()
+    assert {r.id: r.rank for r in got} == _py_pagerank(TOY, 4)
+    # iteration 2 joins the state cut after iteration 1
+    assert len(live) == 4 and live[2] == 0, live
+
+
 def test_pagerank_hub_outranks_leaf(spark):
     """Node 1 (degree 4 in TOY) must outrank the pendant node 5."""
     edges = spark.createDataFrame(TOY, "src long, dst long")

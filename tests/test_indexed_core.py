@@ -669,3 +669,69 @@ def test_concurrent_reindex_restores_aqe(spark):
         done = list(pool.map(lambda f: f.reindex(), frames, timeout=120))
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
     assert [d.count() for d in done] == [10] * 6
+
+
+# --- index layout: writes shuffle only their batch ---------------------- #
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["multiput", "multiput_sum", "multiput_df", "delete", "build_sum",
+     "aggregate_using_index"],
+)
+def test_writes_keep_index_layout(spark, request, op):
+    """Every keyed fold lands in ``hashpartitioning(keys, num_partitions)``
+    whatever ``spark.sql.shuffle.partitions`` says (8 here, the index
+    has 2): a mutation shuffles only its batch and keeps 2 physical
+    partitions, and a fold plans one exchange (the reference's multiput
+    probes update keys into the existing partitions,
+    PARTPartition.scala:51-61)."""
+    n, parts = 20_000, 2
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) != parts
+    rows = spark.range(n).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    model = {k: k for k in range(n)}
+    base = IndexedDataFrame.from_unique(rows, "k", num_partitions=parts)
+    # 300 keys each given twice, a third of them absent from the base
+    dup_keys = [k * 99 for k in range(300)]
+    if op in ("build_sum", "aggregate_using_index"):
+        if op == "build_sum":
+            out = IndexedDataFrame.build(
+                rows.select((F.col("k") % 5_000).alias("k"), "v"),
+                "k", num_partitions=parts, merge=SUM_MERGE, cache=False,
+            )
+            model = {}
+            for k in range(n):
+                model[k % 5_000] = model.get(k % 5_000, 0) + k
+        else:
+            elems = local_rows_df(spark, [(k, 1) for k in dup_keys * 2], "k long, v long")
+            out = base.aggregate_using_index(elems, SUM_MERGE)
+            model = {k: 2 for k in dup_keys}
+        plan = X.final_plan_section(X.executed_plan(out.df))
+        assert X.count_exchanges(plan) == 1, plan
+    else:
+        if op == "multiput":
+            ups = {k: -k for k in dup_keys}
+            out = base.multiput(ups)
+            model.update(ups)
+        elif op == "multiput_sum":
+            out = base.multiput({k: 5 for k in dup_keys}, f=SUM_MERGE)
+            for k in dup_keys:
+                model[k] = model.get(k, 0) + 5
+        elif op == "multiput_df":
+            ups = spark.range(600).select(
+                ((F.col("id") % 300) * 99).alias("k"), F.lit(1).cast("long").alias("v")
+            )
+            out = base.multiput_df(ups, f=SUM_MERGE)
+            for k in dup_keys:
+                model[k] = model.get(k, 0) + 2
+        else:
+            request.getfixturevalue("no_broadcast")
+            out = base.delete(dup_keys)
+            for k in dup_keys:
+                model.pop(k, None)
+        assert X.count_live_shuffles(out.df) == 1, X.final_plan_section(
+            X.executed_plan(out.df)
+        )
+    assert out.df.rdd.getNumPartitions() == parts
+    assert {r["k"]: r["v"] for r in out.df.collect()} == model
+    base.unpersist()

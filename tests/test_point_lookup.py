@@ -195,8 +195,16 @@ def _broken_layout_frame(spark, df):
 
 
 def _coalesced_agg_frame(spark, df):
-    # contract count = shuffle partitions, so the hash-agg's own exchange
-    # is the layout — and AQE coalesces that exchange on small input
+    # a hash aggregate wrapped at the shuffle partition count: its own
+    # exchange is the layout, and AQE coalesces that exchange on small
+    # input because nothing pins the partition count
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return IndexedDataFrame(df.groupBy("k").agg(F.sum("v").alias("v")), ["k"], n)
+
+
+def _agg_expr_frame(spark, df):
+    # aggregate_using_index_expr ends in the index layout, which pins
+    # the partition count against AQE coalescing
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     base = IndexedDataFrame.from_unique(df, "k", num_partitions=n)
     return base.aggregate_using_index_expr(
@@ -210,6 +218,7 @@ def _coalesced_agg_frame(spark, df):
         pytest.param(_contract_frame, True, id="contract"),
         pytest.param(_broken_layout_frame, False, id="broken_layout"),
         pytest.param(_coalesced_agg_frame, False, id="coalesced_agg"),
+        pytest.param(_agg_expr_frame, True, id="agg_expr"),
     ],
 )
 def test_index_layout_guard(spark, monkeypatch, make, in_place):

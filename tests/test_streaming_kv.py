@@ -106,14 +106,10 @@ def test_compaction_plan_size_stays_flat(spark, no_broadcast):
     grow with the number of batches folded before it, and it keeps the
     key partitioning, so neither a co-partitioned join nor the next
     merge reshuffles it."""
-    # the session's shuffle partition count: a merge whose updates-side
-    # aggregate shuffles to more partitions than the base has would
-    # re-shuffle the base to match
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     base = IndexedDataFrame.from_unique(
         spark.range(8).select(F.col("id").alias("k"), F.lit(0.0).alias("v")),
         "k",
-        num_partitions=n,
+        num_partitions=2,
         cache=False,
     )
     store = StreamingKVStore(base, merge=SUM_MERGE, compact_every=2)
@@ -133,7 +129,7 @@ def test_compaction_plan_size_stays_flat(spark, no_broadcast):
     partner = IndexedDataFrame.from_unique(
         spark.range(0, 8, 2).select(F.col("id").alias("k"), F.lit(1.0).alias("v")),
         "k",
-        num_partitions=n,
+        num_partitions=2,
     )
     joined = store.current.inner_join(partner, lambda x, y: x + y)
     assert X.count_live_shuffles(joined.df) == 0
