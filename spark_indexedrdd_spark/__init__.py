@@ -14,8 +14,9 @@ This package re-expresses that contract Spark-first:
   cached; every mutation is functional (returns a new IndexedDataFrame,
   parent unchanged — the reference's copy-on-write snapshot semantics,
   PARTPartition.scala:53, fall out of DataFrame immutability).
-- ``operators/`` — point-lookup fast path (targeted-partition jobs, the
-  multiget analog of IndexedRDD.scala:79-94) and the SQL analytics surface
+- ``operators/`` — point-lookup fast path (driver-resident sorted arrays
+  within a byte budget, else targeted-partition jobs, the multiget analog
+  of IndexedRDD.scala:79-94) and the SQL analytics surface
   the reference lacks (grouped aggregation, windows, top-k, set ops).
 - ``sources/`` — parquet table loaders + KV view builders over the
   driver's TPC-H-ish testdata.

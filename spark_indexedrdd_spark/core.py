@@ -23,10 +23,12 @@ This is the PySpark-native re-expression of the reference's
    point read runs one JVM job on one of two routes: a single-column
    ``key IN (...)`` filter with short-circuit scan, or a left semi-join
    against the key batch for composite keys, literals the IN renderer
-   refuses and batches over 8192 keys. The optional point index
-   attached by ``with_point_index()`` (``operators/point.py``)
-   reproduces the touch-only-owning-partitions property of multiget
-   (IndexedRDD.scala:79-94).
+   refuses and batches over 512 keys. The optional point index attached
+   by ``with_point_index()`` (``operators/point.py``) keeps the index
+   resident like the reference (PARTPartition.scala:26-40): a frame
+   within ``driver_budget_bytes()`` is answered from driver-side sorted
+   arrays with no Spark job, any other frame by a probe of only the
+   key-owning partitions (IndexedRDD.scala:79-94).
 
 Every mutation (put/multiput/delete/…) is **functional**: it returns a new
 IndexedDataFrame and leaves the parent usable — the reference achieves this
@@ -75,6 +77,12 @@ IDENTITY: InitFn = lambda new: new  # noqa: E731
 _MAX_CHAIN = 64
 # one reindex() at a time switches the session's AQE flag off and back
 _AQE_SWITCH = threading.Lock()
+# Largest single-key batch the IN route takes; larger ones take the
+# semi-join. Measured on 1M long keys, 8 partitions, local[4], median of
+# 5 in alternating order, two runs, IN vs semi-join: 136/135 vs 216/161 ms
+# at 256 keys, 165/141 vs 180/141 at 512, 184/136 vs 152/129 at 1024,
+# 207/167 vs 133/110 at 2048.
+_IN_MAX_KEYS = 512
 
 
 def _as_list(x: str | Sequence[str]) -> list[str]:
@@ -471,27 +479,32 @@ class IndexedDataFrame:
         chosen from the deduplicated batch:
 
         - a single-column key whose literals all render through
-          :func:`_sql_literal`, at most 8192 of them: ``key IN (...)``
-          filter + collect (Catalyst short-circuits non-matching batches
-          via in-memory column stats);
+          :func:`_sql_literal`, at most ``_IN_MAX_KEYS`` (512) of them:
+          ``key IN (...)`` filter + collect (Catalyst short-circuits
+          non-matching batches via in-memory column stats);
         - any other batch (composite keys, quotes, NaN, ``Decimal``,
           timestamps, larger batches): left semi-join against the batch
           as a local relation, which the planner broadcasts.
 
-        For the strict touch-only-owning-partitions behavior on huge
-        cached indexes, attach ``with_point_index()``; mutated versions
-        answer their own puts/deletes from a driver-side overlay first.
-        Missing keys are absent from the result (reference :93).
+        With ``with_point_index()`` attached, the index answers first:
+        its driver tier from sorted arrays with no Spark job, its
+        cluster tier by probing only the owning partitions. A batch the
+        driver tier cannot compare exactly (a key of the wrong Python
+        type) takes the routes above. Mutated versions answer their own
+        puts/deletes from a driver-side overlay first. Missing keys are
+        absent from the result (reference :93).
         """
         key_tuples = [self._key_tuple(k) for k in ks]
         if not key_tuples:
             return {}
         if self._pindex is not None:
-            # attached index: schedule only the owning partitions
+            # attached index; None = a batch its driver tier declines
             single = len(self.keys) == 1
-            return self._pindex.multiget(
+            res = self._pindex.multiget(
                 [kt[0] if single else kt for kt in key_tuples]
             )
+            if res is not None:
+                return res
         if self._point_parent is not None and (
             self._point_merge_spec is None
             or (pm := self._resolve_point_merge()) is not None
@@ -542,8 +555,7 @@ class IndexedDataFrame:
         # filter took 0.7 s at 16 keys and 14 s at 256 (its generated
         # code grows past 64 KB, so whole-stage codegen is dropped); the
         # semi-join takes 0.33-0.35 s from 1 to 1024 keys. Single-key IN
-        # vs semi-join: 172 vs 205 ms at 1 key, 214 vs 184 ms at 1024,
-        # 382 vs 206 ms at 4096, 1056 vs 317 ms at 16384.
+        # vs semi-join: see _IN_MAX_KEYS.
         key_tuples = list(dict.fromkeys(key_tuples))
         cond = self._in_condition(key_tuples)
         if cond is not None:
@@ -560,8 +572,8 @@ class IndexedDataFrame:
     def _in_condition(self, key_tuples: list[tuple]) -> Column | None:
         """``key IN (...)`` as ONE parsed SQL expression, or None when the
         batch takes the semi-join: a composite key, a literal
-        :func:`_sql_literal` refuses, or more than 8192 keys."""
-        if len(self.keys) != 1 or len(key_tuples) > 8192:
+        :func:`_sql_literal` refuses, or more than ``_IN_MAX_KEYS``."""
+        if len(self.keys) != 1 or len(key_tuples) > _IN_MAX_KEYS:
             return None
         lits = [_sql_literal(t[0]) for t in key_tuples]
         if None in lits:
@@ -578,17 +590,20 @@ class IndexedDataFrame:
         return out
 
     def with_point_index(self) -> "IndexedDataFrame":
-        """Attach a :class:`NativeHashPointIndex` built from this frame's
-        own partitioning (the reference's stance that the index IS the
-        data structure, IndexedRDD.scala:39-45). Every subsequent
-        ``get``/``multiget`` schedules only the key-owning partitions via
-        driver-side Murmur3 routing instead of filtering the cache.
-        Built once, reused; returns self for chaining. Later put/delete
-        versions answer their own mutations from the overlay and route
-        the remainder here — no rebuild per version (the reference's
-        shared-index property). Single-value frames only (the only
-        frames ``multiget`` routes to an index); raises ``ValueError``
-        otherwise."""
+        """Attach a :class:`NativeHashPointIndex` (the reference's stance
+        that the index IS the data structure, IndexedRDD.scala:39-45).
+        A single-key frame of integral or string keys and an integral,
+        boolean, floating or string value within ``driver_budget_bytes()``
+        is collected once into driver-side sorted arrays, and every
+        subsequent ``get``/``multiget`` answers from them with no Spark
+        job; any other frame gets one dict per hash partition, and a read
+        schedules only the key-owning partitions via driver-side Murmur3
+        routing. Built once, reused; returns self for chaining. Later
+        put/delete versions answer their own mutations from the overlay
+        and route the remainder here — no rebuild per version (the
+        reference's shared-index property). Single-value frames only
+        (the only frames ``multiget`` routes to an index); raises
+        ``ValueError`` otherwise."""
         if self._pindex is None:
             from spark_indexedrdd_spark.operators.point import (
                 NativeHashPointIndex,
@@ -988,7 +1003,8 @@ class IndexedDataFrame:
         return self
 
     def unpersist(self, blocking: bool = False) -> "IndexedDataFrame":
-        """Release the cached columnar form and any attached point index.
+        """Release the cached columnar form and any attached point index
+        (its driver-side arrays or its cached per-partition dicts).
         A reindexed version's checkpoint blocks stay: versions derived
         from it still read them, and Spark's ``ContextCleaner`` reclaims
         them once no such version is reachable."""

@@ -1,21 +1,26 @@
-"""Targeted-partition point lookups — the multiget fast path.
+"""The attached point index — the multiget fast path, in two tiers.
 
-The reference's ``multiget`` computes each key's owning partition on the
-driver with the partitioner and launches a job on ONLY those partitions
-(``context.runJob(partitionsRDD, fn, partitions)``,
-reference IndexedRDD.scala:79-94); untouched partitions are never
-scheduled. DataFrames cannot express "run on a subset of cached
-partitions", so :class:`NativeHashPointIndex` reproduces the property with
-the RDD API: build one hash-map per hash partition of the frame (the dict
-stands in for the per-partition ART tree, reference PARTPartition.scala:
-26-40), route each key to its partition with Spark's own Murmur3 on the
-driver (``hashing.py``), and ``sc.runJob`` on just the owning partitions.
+The reference keeps its index resident and answers ``multiget`` from it
+(reference PARTPartition.scala:26-40, IndexedRDD.scala:79-94).
+:class:`NativeHashPointIndex` picks one of two tiers when it is built:
 
-Scale: on a 1000-executor cluster a multiget of k keys schedules at most
-min(k, n) tasks and moves only the requested values to the driver — same
-asymptotics as the reference. This is an *optional* fast path, attached
-with ``IndexedDataFrame.with_point_index()``: the DataFrame ``isin``
-filter in ``IndexedDataFrame.multiget`` is the correctness-checked default.
+- **Driver tier.** A frame with one integral or string key column and
+  one integral, boolean, floating or string value column, whose size is
+  at most :func:`~spark_indexedrdd_spark.session.driver_budget_bytes`,
+  is collected once through Arrow into key-sorted numpy arrays. A
+  multiget is then one ``np.searchsorted`` and launches no Spark job:
+  the Python/JVM boundary is crossed once at build, not on every read.
+- **Cluster tier.** Every other frame keeps one hash map per hash
+  partition (the dict stands in for the per-partition ART tree), routes
+  each key to its partition with Spark's own Murmur3 on the driver
+  (``hashing.py``) and ``sc.runJob``s just the owning partitions, as
+  the reference does (``context.runJob(partitionsRDD, fn, partitions)``).
+  On a 1000-executor cluster a multiget of k keys schedules at most
+  min(k, n) tasks and moves only the requested values to the driver.
+
+The index is optional, attached with ``IndexedDataFrame.with_point_index()``;
+the JVM routes of ``IndexedDataFrame.multiget`` are the correctness-checked
+default and answer every batch the driver tier declines.
 """
 
 from __future__ import annotations
@@ -23,7 +28,10 @@ from __future__ import annotations
 from collections.abc import Iterable
 from typing import Any
 
+import numpy as np
 from pyspark import TaskContext
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from spark_indexedrdd_spark.localframe import local_rows_df
 
@@ -32,27 +40,40 @@ from spark_indexedrdd_spark.hashing import (
     hashers_for_schema,
     spark_partition_of,
 )
+from spark_indexedrdd_spark.session import driver_budget_bytes
+
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+_DRIVER_VALUES = _INTEGRAL + (
+    T.BooleanType, T.FloatType, T.DoubleType, T.StringType
+)
 
 
 class NativeHashPointIndex:
-    """Per-partition hash index over a single-value IndexedDataFrame.
+    """Point index over a single-value IndexedDataFrame, driver or
+    cluster tier (module docstring).
 
-    ``df.repartition(n, *keys)`` places each row in physical partition
-    ``pmod(murmur3_hash(keys), n)`` — verified empirically for long,
-    string, and composite keys (tests/test_point_lookup.py). So for a
-    frame that follows the build contract the per-partition dicts are
+    Driver tier: ``_keys`` holds the non-NULL keys sorted (int64, or
+    Python ``str`` in an object array — a numpy ``<U`` array would drop
+    trailing ``'\\x00'``), ``_values`` the values in the same order and
+    ``_nulls`` their NULL mask; rows with a NULL key are left out, since
+    NULL never matches ``IN`` or an equi-join. Values come back through
+    ``.tolist()``, so each is the Python object ``collect()`` gives.
+
+    Cluster tier: ``df.repartition(n, *keys)`` places each row in physical
+    partition ``pmod(murmur3_hash(keys), n)`` — verified empirically for
+    long, string, and composite keys (tests/test_point_lookup.py). So for
+    a frame that follows the build contract the per-partition dicts are
     built straight off its cached partitions (one narrow scan, no
     shuffle), and a multiget routes keys with Spark's own partitioner as
     the global index, exactly as the reference uses ITS partitioner
-    (IndexedRDD.scala:42).
-
-    Derived frames (joins, aggregations) keep the hash layout but AQE may
-    coalesce their runtime partition COUNT below ``num_partitions``. Such
-    a frame is re-laid out once with ``repartition(n, *keys)`` — one JVM
-    exchange — so the same driver-side routing stays valid."""
+    (IndexedRDD.scala:42). Derived frames (joins, aggregations) keep the
+    hash layout but AQE may coalesce their runtime partition COUNT below
+    ``num_partitions``; such a frame is re-laid out once with
+    ``repartition(n, *keys)`` — one JVM exchange — so the same
+    driver-side routing stays valid."""
 
     def __init__(self, idf: IndexedDataFrame):
-        idf._single_value()
+        value = idf._single_value()
         self.keys = list(idf.keys)
         self.n = idf.num_partitions
         self._spark = idf.df.sparkSession
@@ -60,6 +81,51 @@ class NativeHashPointIndex:
         # driver-side Murmur3 (hashing.py) when every key type supports it;
         # None -> owning_partitions asks Spark with a hash-of-literals job
         self._hashers = hashers_for_schema(self._key_schema)
+        self._keys = self._values = self._nulls = self._parts = None
+        if not self._collect_sorted(idf.df, value):
+            self._parts = self._build_probe(idf)
+
+    def _collect_sorted(self, df: DataFrame, value: str) -> bool:
+        """Driver tier: collect the frame once into key-sorted arrays.
+        False (nothing kept) when the frame does not fit the tier."""
+        kt, vt = self._key_schema[0].dataType, df.schema[value].dataType
+        if not (
+            len(self.keys) == 1
+            and (isinstance(kt, _INTEGRAL) or kt == T.StringType())
+            and isinstance(vt, _DRIVER_VALUES)
+        ):
+            return False
+        budget = driver_budget_bytes()
+        # Catalyst's size estimate runs no job; a plan of unknown size
+        # (one built from Python rows) reads as a huge default
+        if df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > budget:
+            return False
+        table = df.select(self.keys[0], value).toArrow()
+        if table.nbytes > budget:
+            return False
+        kcol, vcol = table.column(0), table.column(1)
+        if kcol.null_count:
+            live = kcol.is_valid()
+            kcol, vcol = kcol.filter(live), vcol.filter(live)
+        if isinstance(kt, T.StringType):
+            keys = np.array(kcol.to_pylist(), dtype=object)
+        else:
+            keys = kcol.to_numpy().astype(np.int64)
+        if isinstance(vt, T.StringType):
+            values = np.array(vcol.to_pylist(), dtype=object)
+        else:
+            # fill before to_numpy: with NULLs present Arrow would hand
+            # an integral column back as float64
+            fill = False if isinstance(vt, T.BooleanType) else 0
+            values = vcol.fill_null(fill).to_numpy()
+        order = np.argsort(keys, kind="stable")
+        self._keys = keys[order]
+        self._values = values[order]
+        self._nulls = vcol.is_null().to_numpy()[order]
+        return True
+
+    def _build_probe(self, idf: IndexedDataFrame):
+        """Cluster tier: one cached dict per hash partition."""
         nk = len(self.keys)
 
         def to_dict(it):
@@ -72,10 +138,9 @@ class NativeHashPointIndex:
         if base.getNumPartitions() != self.n:
             # layout guard: rows no longer sit in pmod(murmur3(keys), n)
             base = idf.df.repartition(self.n, *self.keys).rdd
-        self._parts = base.mapPartitions(
-            to_dict, preservesPartitioning=True
-        ).cache()
-        self._parts.count()
+        parts = base.mapPartitions(to_dict, preservesPartitioning=True).cache()
+        parts.count()
+        return parts
 
     def owning_partitions(self, key_tuples: list[tuple]) -> dict[int, list]:
         """Each key's owning partition, computed ON THE DRIVER with the
@@ -102,11 +167,19 @@ class NativeHashPointIndex:
             by_part.setdefault(r["__p"], []).append(k)
         return by_part
 
-    def multiget(self, ks: Iterable[Any]) -> dict:
-        """Probe only the owning partitions (reference IndexedRDD.scala:80-92)."""
+    def multiget(self, ks: Iterable[Any]) -> dict | None:
+        """Driver tier: ``searchsorted`` over the sorted keys, no Spark
+        job. Returns None for a batch it cannot answer exactly — a key
+        that is not a Python ``int`` within int64 (``bool`` excluded) on
+        an integral key column, or not a ``str`` on a string one — so the
+        caller takes a JVM route, which applies Spark's type coercion.
+        Cluster tier: probe only the owning partitions (reference
+        IndexedRDD.scala:80-92)."""
         ks = list(ks)
         if not ks:
             return {}
+        if self._parts is None:
+            return self._search(ks)
         key_tuples = [k if isinstance(k, tuple) else (k,) for k in ks]
         by_part = self.owning_partitions(key_tuples)
 
@@ -120,8 +193,38 @@ class NativeHashPointIndex:
         # runJob flattens the per-partition lists into one list of pairs
         return dict(sc.runJob(self._parts, probe, partitions=sorted(by_part)))
 
+    def _search(self, ks: list) -> dict | None:
+        if self._keys.dtype == object:
+            if not all(isinstance(k, str) for k in ks):
+                return None
+            q = np.array(ks, dtype=object)
+        else:
+            if not all(isinstance(k, int) and not isinstance(k, bool) for k in ks):
+                return None
+            try:
+                q = np.array(ks, dtype=np.int64)
+            except OverflowError:
+                return None
+        if not len(self._keys):
+            return {}
+        pos = np.minimum(np.searchsorted(self._keys, q), len(self._keys) - 1)
+        hit = self._keys[pos] == q
+        at = pos[hit]
+        vals = self._values[at].tolist()
+        for i in np.flatnonzero(self._nulls[at]):
+            vals[i] = None
+        return dict(zip(q[hit].tolist(), vals))
+
     def get(self, key: Any):
-        return self.multiget([key]).get(key)
+        res = self.multiget([key])
+        if res is None:
+            raise TypeError(
+                f"key {key!r} does not match the key column's type; "
+                "IndexedDataFrame.get answers it through a JVM route"
+            )
+        return res.get(key)
 
     def unpersist(self) -> None:
-        self._parts.unpersist()
+        self._keys = self._values = self._nulls = None
+        if self._parts is not None:
+            self._parts.unpersist()

@@ -50,3 +50,16 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def driver_budget_bytes() -> int:
+    """Bytes one driver-resident structure may hold: 1/8 of the driver
+    JVM's ``Runtime.maxMemory()`` (about 230 MB on a 2 GB driver). A
+    structure above it takes its cluster path instead. 0 when no
+    SparkContext is active."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return 0
+    return sc._jvm.java.lang.Runtime.getRuntime().maxMemory() // 8

@@ -533,6 +533,32 @@ def test_multiget_composite_takes_semi_join(spark, monkeypatch, n_batch):
     assert not any(" OR " in ln for ln in filters), filters
 
 
+def test_single_key_in_route_stops_at_crossover(spark, monkeypatch):
+    """A single-key batch of up to ``_IN_MAX_KEYS`` renderable literals
+    takes the IN filter; one key more takes the semi-join."""
+    from spark_indexedrdd_spark import core
+
+    kv = IndexedDataFrame.from_unique(
+        spark.range(2000).select(F.col("id").alias("k"), F.col("id").alias("v")),
+        "k",
+        num_partitions=3,
+    )
+    seen = []
+    frame_cls = type(kv.df)
+    collect = frame_cls.collect
+
+    def spy(self):
+        seen.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    for n, semi in ((core._IN_MAX_KEYS, False), (core._IN_MAX_KEYS + 1, True)):
+        batch = list(range(0, 4 * n, 4))  # the last few miss
+        assert kv.multiget(batch) == {k: k for k in batch if k < 2000}
+        plan = X.final_plan_section(X.executed_plan(seen.pop()))
+        assert ("LeftSemi" in plan) == semi, plan
+
+
 # --- MERGE INTO sugar --------------------------------------------------- #
 
 

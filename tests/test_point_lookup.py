@@ -1,10 +1,13 @@
-"""Tests for the targeted-partition multiget fast path
-(reference IndexedRDD.scala:79-94)."""
+"""Tests for the attached point index (reference IndexedRDD.scala:79-94):
+its driver tier (sorted arrays, no Spark job) and its cluster tier (the
+targeted-partition probe)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from spark_indexedrdd_spark.core import IndexedDataFrame
+from spark_indexedrdd_spark.core import SUM_MERGE, IndexedDataFrame
+from spark_indexedrdd_spark.localframe import local_rows_df
+from spark_indexedrdd_spark.operators import point
 from spark_indexedrdd_spark.operators.point import NativeHashPointIndex
 
 
@@ -14,7 +17,16 @@ def idx(spark):
     return IndexedDataFrame.build(df, "k", num_partitions=5)
 
 
-def test_multiget_hits_and_misses(idx):
+@pytest.fixture
+def cluster_tier():
+    """Indexes built in the test take the cluster tier: a zero driver
+    budget fits no frame."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(point, "driver_budget_bytes", lambda: 0)
+        yield
+
+
+def test_multiget_hits_and_misses(idx, cluster_tier):
     ni = NativeHashPointIndex(idx)
     assert ni.multiget([0, 7, 199, -1, 1000]) == {0: 0, 7: 14, 199: 398}
     assert ni.get(42) == 84
@@ -111,7 +123,7 @@ def test_native_index_composite(spark):
     }
 
 
-def test_targets_only_owning_partitions(idx, monkeypatch):
+def test_targets_only_owning_partitions(idx, monkeypatch, cluster_tier):
     ni = NativeHashPointIndex(idx)
     sc_cls = type(ni._parts.context)
     run_job = sc_cls.runJob
@@ -221,7 +233,7 @@ def _agg_expr_frame(spark, df):
         pytest.param(_agg_expr_frame, True, id="agg_expr"),
     ],
 )
-def test_index_layout_guard(spark, monkeypatch, make, in_place):
+def test_index_layout_guard(spark, monkeypatch, make, in_place, cluster_tier):
     """Contract frames are indexed in place (no repartition); a frame
     whose physical partition count breaks the contract is re-laid out
     once, and either way the index answers like the plain multiget."""
@@ -264,7 +276,7 @@ def test_with_point_index_requires_single_value(spark):
     assert idf._pindex is None
 
 
-def test_unpersist_releases_point_index(spark):
+def test_unpersist_releases_point_index(spark, cluster_tier):
     sc = spark.sparkContext
     df = spark.createDataFrame([(i, i) for i in range(50)], "k long, v long")
     before = sc._jsc.getPersistentRDDs().size()
@@ -285,3 +297,149 @@ def test_nli_owning_partitions_driver_side(spark):
     assert ni._hashers is not None
     ks = [f"doc{i}" for i in range(0, 80, 7)] + ["missing"]
     assert ni.multiget(ks) == {f"doc{i}": float(i) for i in range(0, 80, 7)}
+
+
+def test_unpersist_releases_driver_tier(spark):
+    sc = spark.sparkContext
+    df = spark.range(50).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    before = sc._jsc.getPersistentRDDs().size()
+    idf = IndexedDataFrame.build(df, "k", num_partitions=4).with_point_index()
+    ni = idf._pindex
+    assert ni._parts is None and len(ni._keys) == 50
+    # the cached frame only: the arrays live in driver memory
+    assert sc._jsc.getPersistentRDDs().size() == before + 1
+    idf.unpersist(blocking=True)
+    assert idf._pindex is None
+    assert ni._keys is None and ni._values is None and ni._nulls is None
+    assert sc._jsc.getPersistentRDDs().size() == before
+
+
+# --------------------------------------------------------------------- #
+# driver tier: exact against the un-indexed JVM routes, zero Spark jobs
+# --------------------------------------------------------------------- #
+
+_I64 = 2**63 - 1
+_KEYS = {
+    "int": [0, 1, -1, 42, 2**31 - 1, -(2**31)],
+    "long": [0, 1, -1, 42, _I64, -_I64 - 1, 2**40],
+    "string": ["", "a", "a\x00", "héllo", "日本語", "o'brien", "k1"],
+}
+_MISSES = {
+    "int": [7, -(10**6)],
+    "long": [7, 2**62],
+    "string": ["A", "a\x00\x00", "zz"],
+}
+_F32 = 0.10000000149011612  # float32(0.1) widened, what collect() gives
+_VALUES = {
+    "long": [None, _I64, -_I64, 0, 7],
+    "int": [None, 2**31 - 1, -(2**31), 0],
+    "boolean": [None, True, False],
+    "float": [None, float("nan"), -0.0, _F32, 1e38],
+    "double": [None, float("nan"), -0.0, _F32, 0.1, 1e308],
+    "string": [None, "", "héllo", "日本", "a\x00"],
+}
+
+
+def _key_value_frame(spark, kdt, vdt):
+    keys, vals = _KEYS[kdt], _VALUES[vdt]
+    rows = [(k, vals[i % len(vals)]) for i, k in enumerate(keys)]
+    rows.append((None, vals[1]))  # a NULL key matches no read
+    df = local_rows_df(spark, rows, f"k {kdt}, v {vdt}")
+    return IndexedDataFrame.from_unique(df, "k", num_partitions=3)
+
+
+def _jobs_of(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("vdt", list(_VALUES))
+@pytest.mark.parametrize("kdt", list(_KEYS))
+def test_driver_tier_matches_plain_multiget(spark, kdt, vdt):
+    idf = _key_value_frame(spark, kdt, vdt)
+    keys = _KEYS[kdt]
+    batch = keys[::-1] + keys[:3] + _MISSES[kdt]  # duplicates and misses
+    plain, plain_jobs = _jobs_of(spark, f"jvm-{kdt}-{vdt}", lambda: idf.multiget(batch))
+    assert len(plain) == len(keys) and plain_jobs  # the group sees JVM jobs
+
+    idf.with_point_index()
+    assert idf._pindex._parts is None  # the driver tier
+    got, jobs = _jobs_of(spark, f"driver-tier-{kdt}-{vdt}", lambda: idf.multiget(batch))
+    assert jobs == []
+    assert got.keys() == plain.keys()
+    for k, v in plain.items():
+        # repr tells NaN, -0.0 and float32 widening apart
+        assert type(got[k]) is type(v) and repr(got[k]) == repr(v), (k, got[k], v)
+    idf.unpersist()
+
+
+def test_overlay_versions_compose_on_driver_tier(spark):
+    """put/delete versions of a driver-tier frame answer their own keys
+    from the overlay and the rest from the arrays: no Spark job."""
+    df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+    idf = IndexedDataFrame.from_unique(df, "k", 2).with_point_index()
+    assert idf._pindex._parts is None
+    v2 = idf.put(3, 300).delete([5]).multiput({7: 1}, f=SUM_MERGE)
+    got, jobs = _jobs_of(spark, "overlay-on-driver-tier", lambda: v2.multiget([3, 5, 7, 9, 500]))
+    assert got == {3: 300, 7: 15, 9: 18} and jobs == []
+    assert idf.multiget([3, 5, 7]) == {3: 6, 5: 10, 7: 14}
+
+
+def _outcome(fn):
+    try:
+        return fn()
+    except Exception as e:  # the JVM route's own error is its answer
+        return type(e)
+
+
+@pytest.mark.parametrize(
+    "kdt, batch",
+    [
+        pytest.param("long", [1.0, 42], id="float_key"),
+        pytest.param("long", [True], id="bool_key"),
+        pytest.param("long", [2**70, 42], id="int_beyond_int64"),
+        pytest.param("long", [None, 42], id="none_key"),
+        pytest.param("string", [1, "a"], id="int_on_string"),
+    ],
+)
+def test_driver_tier_declines_inexact_batches(spark, kdt, batch):
+    """A batch the arrays cannot compare exactly goes down the JVM
+    routes, and gets exactly their answer."""
+    plain = _key_value_frame(spark, kdt, "long")
+    indexed = _key_value_frame(spark, kdt, "long").with_point_index()
+    assert indexed._pindex._parts is None
+    assert indexed._pindex.multiget(batch) is None
+    assert _outcome(lambda: indexed.multiget(batch)) == _outcome(
+        lambda: plain.multiget(batch)
+    )
+
+
+def test_tier_selection(spark, monkeypatch):
+    """Only a single-key frame of driver-tier types within the budget
+    is collected; every other frame builds the owning-partition probe."""
+    small = spark.range(1000).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    fits = NativeHashPointIndex(IndexedDataFrame.from_unique(small, "k", 2))
+    assert fits._parts is None and fits.multiget([3, 5000]) == {3: 3}
+
+    dbl = small.select(F.col("k").cast("double").alias("k"), "v")
+    composite = small.select("k", (F.col("k") % 3).alias("k2"), "v")
+    cases = [
+        IndexedDataFrame.from_unique(dbl, "k", 2),
+        IndexedDataFrame.from_unique(composite, ["k", "k2"], 2),
+    ]
+    for idf in cases:
+        ni = NativeHashPointIndex(idf)
+        assert ni._parts is not None and ni._keys is None
+        ni.unpersist()
+
+    # over budget: 1,000 rows of two longs in a 1 kB budget
+    monkeypatch.setattr(point, "driver_budget_bytes", lambda: 1000)
+    over = NativeHashPointIndex(IndexedDataFrame.from_unique(small, "k", 2))
+    assert over._parts is not None and over.multiget([3, 5000]) == {3: 3}
+    over.unpersist()
+    fits.unpersist()
