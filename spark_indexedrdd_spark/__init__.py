@@ -15,8 +15,8 @@ This package re-expresses that contract Spark-first:
   parent unchanged — the reference's copy-on-write snapshot semantics,
   PARTPartition.scala:53, fall out of DataFrame immutability).
 - ``operators/`` — point-lookup fast path (driver-resident sorted arrays
-  within a byte budget, else targeted-partition jobs, the multiget analog
-  of IndexedRDD.scala:79-94) and the SQL analytics surface
+  within a byte budget, the multiget analog of IndexedRDD.scala:79-94)
+  and the SQL analytics surface
   the reference lacks (grouped aggregation, windows, top-k, set ops).
 - ``sources/`` — parquet table loaders + KV view builders over the
   driver's TPC-H-ish testdata.

@@ -27,8 +27,7 @@ This is the PySpark-native re-expression of the reference's
    by ``with_point_index()`` (``operators/point.py``) keeps the index
    resident like the reference (PARTPartition.scala:26-40): a frame
    within ``driver_budget_bytes()`` is answered from driver-side sorted
-   arrays with no Spark job, any other frame by a probe of only the
-   key-owning partitions (IndexedRDD.scala:79-94).
+   arrays with no Spark job; any other frame keeps the JVM routes.
 
 Every mutation (put/multiput/delete/…) is **functional**: it returns a new
 IndexedDataFrame and leaves the parent usable — the reference achieves this
@@ -486,11 +485,15 @@ class IndexedDataFrame:
           timestamps, larger batches): left semi-join against the batch
           as a local relation, which the planner broadcasts.
 
-        With ``with_point_index()`` attached, the index answers first:
-        its driver tier from sorted arrays with no Spark job, its
-        cluster tier by probing only the owning partitions. A batch the
-        driver tier cannot compare exactly (a key of the wrong Python
-        type) takes the routes above. Mutated versions answer their own
+        A batch over ``_IN_MAX_KEYS`` whose keys do not fit the key
+        column's type (an int beyond int32 on an ``int`` key) cannot be
+        made a local relation; it takes the ``IN`` filter, which widens
+        and reports such keys as misses.
+
+        With ``with_point_index()`` attached, its driver-side sorted
+        arrays answer first, with no Spark job. A batch they cannot
+        compare exactly (a key of the wrong Python type) takes the
+        routes above. Mutated versions answer their own
         puts/deletes from a driver-side overlay first. Missing keys are
         absent from the result (reference :93).
         """
@@ -498,11 +501,8 @@ class IndexedDataFrame:
         if not key_tuples:
             return {}
         if self._pindex is not None:
-            # attached index; None = a batch its driver tier declines
-            single = len(self.keys) == 1
-            res = self._pindex.multiget(
-                [kt[0] if single else kt for kt in key_tuples]
-            )
+            # attached (single-key) index; None = a batch it declines
+            res = self._pindex.multiget([kt[0] for kt in key_tuples])
             if res is not None:
                 return res
         if self._point_parent is not None and (
@@ -558,22 +558,33 @@ class IndexedDataFrame:
         # vs semi-join: see _IN_MAX_KEYS.
         key_tuples = list(dict.fromkeys(key_tuples))
         cond = self._in_condition(key_tuples)
+        if cond is None:
+            try:
+                keys_df = local_rows_df(
+                    self.df.sparkSession,
+                    key_tuples,
+                    self.df.select(*self.keys).schema,
+                )
+            except (TypeError, ValueError):
+                # a key outside the key column's type: only IN takes it
+                cond = self._in_condition(key_tuples, max_keys=None)
+                if cond is None:
+                    raise
         if cond is not None:
             rows = self.df.where(cond).collect()
         else:
-            keys_df = local_rows_df(
-                self.df.sparkSession,
-                key_tuples,
-                self.df.select(*self.keys).schema,
-            )
             rows = self.df.join(keys_df, on=self.keys, how="left_semi").collect()
         return self._rows_to_dict(rows)
 
-    def _in_condition(self, key_tuples: list[tuple]) -> Column | None:
+    def _in_condition(
+        self, key_tuples: list[tuple], max_keys: int | None = _IN_MAX_KEYS
+    ) -> Column | None:
         """``key IN (...)`` as ONE parsed SQL expression, or None when the
         batch takes the semi-join: a composite key, a literal
-        :func:`_sql_literal` refuses, or more than ``_IN_MAX_KEYS``."""
-        if len(self.keys) != 1 or len(key_tuples) > _IN_MAX_KEYS:
+        :func:`_sql_literal` refuses, or more than ``max_keys``."""
+        if len(self.keys) != 1 or (
+            max_keys is not None and len(key_tuples) > max_keys
+        ):
             return None
         lits = [_sql_literal(t[0]) for t in key_tuples]
         if None in lits:
@@ -590,26 +601,28 @@ class IndexedDataFrame:
         return out
 
     def with_point_index(self) -> "IndexedDataFrame":
-        """Attach a :class:`NativeHashPointIndex` (the reference's stance
-        that the index IS the data structure, IndexedRDD.scala:39-45).
-        A single-key frame of integral or string keys and an integral,
-        boolean, floating or string value within ``driver_budget_bytes()``
-        is collected once into driver-side sorted arrays, and every
-        subsequent ``get``/``multiget`` answers from them with no Spark
-        job; any other frame gets one dict per hash partition, and a read
-        schedules only the key-owning partitions via driver-side Murmur3
-        routing. Built once, reused; returns self for chaining. Later
-        put/delete versions answer their own mutations from the overlay
-        and route the remainder here — no rebuild per version (the
-        reference's shared-index property). Single-value frames only
-        (the only frames ``multiget`` routes to an index); raises
-        ``ValueError`` otherwise."""
+        """Attach a driver-resident :class:`NativeHashPointIndex` (the
+        reference's stance that the index IS the data structure,
+        IndexedRDD.scala:39-45). A single-key frame of integral or string
+        keys and an integral, boolean, floating or string value that fits
+        what is left of ``driver_budget_bytes()`` is sized with one
+        aggregate job, collected once into driver-side sorted arrays, and
+        every subsequent ``get``/``multiget`` answers from them with no
+        Spark job. Any other frame attaches nothing and keeps its reads
+        on the JVM routes; calling again re-checks. Built once, reused;
+        returns self for chaining. Later put/delete versions answer their
+        own mutations from the overlay and route the remainder here — no
+        rebuild per version (the reference's shared-index property).
+        Single-value frames only (the only frames ``multiget`` routes to
+        an index); raises ``ValueError`` otherwise."""
         if self._pindex is None:
             from spark_indexedrdd_spark.operators.point import (
                 NativeHashPointIndex,
             )
 
-            self._pindex = NativeHashPointIndex(self)
+            ix = NativeHashPointIndex(self, probe=False)
+            if ix.resident:
+                self._pindex = ix
         return self
 
     def count(self) -> int:
@@ -1004,7 +1017,7 @@ class IndexedDataFrame:
 
     def unpersist(self, blocking: bool = False) -> "IndexedDataFrame":
         """Release the cached columnar form and any attached point index
-        (its driver-side arrays or its cached per-partition dicts).
+        (its driver-side arrays and their share of the budget).
         A reindexed version's checkpoint blocks stay: versions derived
         from it still read them, and Spark's ``ContextCleaner`` reclaims
         them once no such version is reachable."""

@@ -1,36 +1,43 @@
-"""The attached point index — the multiget fast path, in two tiers.
+"""The attached point index — the multiget fast path, driver-resident.
 
 The reference keeps its index resident and answers ``multiget`` from it
 (reference PARTPartition.scala:26-40, IndexedRDD.scala:79-94).
-:class:`NativeHashPointIndex` picks one of two tiers when it is built:
+:class:`NativeHashPointIndex` keeps a frame with one integral or string
+key column and one integral, boolean, floating or string value column
+on the driver: it is collected once through Arrow into key-sorted numpy
+arrays, and a multiget is one ``np.searchsorted`` that launches no Spark
+job, so the Python/JVM boundary is crossed once at build, not on every
+read. Every resident index is charged against one shared budget,
+:func:`~spark_indexedrdd_spark.session.driver_budget_bytes`, with the
+bytes its build holds at its peak (the Arrow table plus the arrays, a
+string key or value counted as a Python object); the size is measured
+with one aggregate job before the collect, not taken from Catalyst's
+estimate, which can be far too low.
 
-- **Driver tier.** A frame with one integral or string key column and
-  one integral, boolean, floating or string value column, whose size is
-  at most :func:`~spark_indexedrdd_spark.session.driver_budget_bytes`,
-  is collected once through Arrow into key-sorted numpy arrays. A
-  multiget is then one ``np.searchsorted`` and launches no Spark job:
-  the Python/JVM boundary is crossed once at build, not on every read.
-- **Cluster tier.** Every other frame keeps one hash map per hash
-  partition (the dict stands in for the per-partition ART tree), routes
-  each key to its partition with Spark's own Murmur3 on the driver
-  (``hashing.py``) and ``sc.runJob``s just the owning partitions, as
-  the reference does (``context.runJob(partitionsRDD, fn, partitions)``).
-  On a 1000-executor cluster a multiget of k keys schedules at most
-  min(k, n) tasks and moves only the requested values to the driver.
-
-The index is optional, attached with ``IndexedDataFrame.with_point_index()``;
-the JVM routes of ``IndexedDataFrame.multiget`` are the correctness-checked
-default and answer every batch the driver tier declines.
+``IndexedDataFrame.with_point_index()`` attaches an index only when the
+frame fits; any other frame keeps its reads on the JVM routes of
+``IndexedDataFrame.multiget``, which are the correctness-checked default
+and also answer every batch the arrays decline. Constructed directly,
+the class falls back to the older owning-partition probe: one hash map
+per hash partition, each key routed to its partition with Spark's own
+Murmur3 on the driver (``hashing.py``) and only the owning partitions
+``sc.runJob``-ed (``context.runJob(partitionsRDD, fn, partitions)``).
+The probe is slower than the JVM routes at every measured batch size
+and is kept only for ``bench.py`` and the benchmark's tracer hooks
+(ROADMAP Direction 2 deletes it).
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
 from collections.abc import Iterable
 from typing import Any
 
 import numpy as np
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_indexedrdd_spark.localframe import local_rows_df
@@ -46,11 +53,24 @@ _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 _DRIVER_VALUES = _INTEGRAL + (
     T.BooleanType, T.FloatType, T.DoubleType, T.StringType
 )
+# Bytes a build holds per row and column at its peak: a fixed-width
+# column is 8 B each in Arrow, in numpy, in its key-sorted copy and in
+# the argsort permutation or NULL mask; a string column is a 4 B Arrow
+# offset, three 8 B pointers (the to_pylist list, the object array and
+# its sorted copy) and a ``str`` header of at most 80 B, plus its UTF-8
+# bytes twice, Arrow's and the ``str``'s. That is exact for ASCII; a
+# ``str`` mixing scripts can take up to 4 B a character.
+_FIXED_ROW_BYTES = 32
+_STRING_ROW_BYTES = 112
+# Driver-tier indexes alive in this process; together they hold at most
+# driver_budget_bytes(). A collected index drops out by itself.
+_RESIDENT: weakref.WeakSet = weakref.WeakSet()
+_RESIDENT_LOCK = threading.Lock()
 
 
 class NativeHashPointIndex:
-    """Point index over a single-value IndexedDataFrame, driver or
-    cluster tier (module docstring).
+    """Point index over a single-value IndexedDataFrame (module
+    docstring).
 
     Driver tier: ``_keys`` holds the non-NULL keys sorted (int64, or
     Python ``str`` in an object array — a numpy ``<U`` array would drop
@@ -58,21 +78,21 @@ class NativeHashPointIndex:
     ``_nulls`` their NULL mask; rows with a NULL key are left out, since
     NULL never matches ``IN`` or an equi-join. Values come back through
     ``.tolist()``, so each is the Python object ``collect()`` gives.
+    ``_charge`` is what the index counts against the shared budget.
 
-    Cluster tier: ``df.repartition(n, *keys)`` places each row in physical
-    partition ``pmod(murmur3_hash(keys), n)`` — verified empirically for
-    long, string, and composite keys (tests/test_point_lookup.py). So for
-    a frame that follows the build contract the per-partition dicts are
-    built straight off its cached partitions (one narrow scan, no
-    shuffle), and a multiget routes keys with Spark's own partitioner as
-    the global index, exactly as the reference uses ITS partitioner
-    (IndexedRDD.scala:42). Derived frames (joins, aggregations) keep the
-    hash layout but AQE may coalesce their runtime partition COUNT below
-    ``num_partitions``; such a frame is re-laid out once with
-    ``repartition(n, *keys)`` — one JVM exchange — so the same
-    driver-side routing stays valid."""
+    A frame that does not fit builds the owning-partition probe when
+    ``probe`` is true (direct construction) and nothing when it is false
+    (``with_point_index()``, which then attaches no index).
+    ``df.repartition(n, *keys)`` places each row in physical partition
+    ``pmod(murmur3_hash(keys), n)`` — verified empirically for long,
+    string, and composite keys (tests/test_point_lookup.py) — so for a
+    frame that follows the build contract the per-partition dicts are
+    built straight off its cached partitions and a multiget routes keys
+    with Spark's own partitioner (IndexedRDD.scala:42). A frame whose
+    runtime partition COUNT differs from ``num_partitions`` (AQE
+    coalescing) is re-laid out once with ``repartition(n, *keys)``."""
 
-    def __init__(self, idf: IndexedDataFrame):
+    def __init__(self, idf: IndexedDataFrame, *, probe: bool = True):
         value = idf._single_value()
         self.keys = list(idf.keys)
         self.n = idf.num_partitions
@@ -82,8 +102,14 @@ class NativeHashPointIndex:
         # None -> owning_partitions asks Spark with a hash-of-literals job
         self._hashers = hashers_for_schema(self._key_schema)
         self._keys = self._values = self._nulls = self._parts = None
-        if not self._collect_sorted(idf.df, value):
+        self._charge = 0
+        if not self._collect_sorted(idf.df, value) and probe:
             self._parts = self._build_probe(idf)
+
+    @property
+    def resident(self) -> bool:
+        """True for the driver tier."""
+        return self._keys is not None
 
     def _collect_sorted(self, df: DataFrame, value: str) -> bool:
         """Driver tier: collect the frame once into key-sorted arrays.
@@ -95,13 +121,26 @@ class NativeHashPointIndex:
             and isinstance(vt, _DRIVER_VALUES)
         ):
             return False
-        budget = driver_budget_bytes()
-        # Catalyst's size estimate runs no job; a plan of unknown size
-        # (one built from Python rows) reads as a huge default
-        if df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > budget:
-            return False
-        table = df.select(self.keys[0], value).toArrow()
-        if table.nbytes > budget:
+        cols = [self.keys[0], value]
+        text = [c for c, t in zip(cols, (kt, vt)) if isinstance(t, T.StringType)]
+        # the real size, from one aggregate job: Catalyst's estimate can
+        # be far below it (a cache reports its child's stats until filled)
+        row = df.agg(
+            F.count(F.lit(1)), *[F.sum(F.octet_length(c)) for c in text]
+        ).first()
+        charge = row[0] * (
+            _FIXED_ROW_BYTES * (2 - len(text)) + _STRING_ROW_BYTES * len(text)
+        ) + 2 * sum(b or 0 for b in row[1:])
+        with _RESIDENT_LOCK:
+            held = sum(ix._charge for ix in _RESIDENT)
+            if charge > driver_budget_bytes() - held:
+                return False
+            self._charge = charge
+            _RESIDENT.add(self)
+        try:
+            table = df.select(*cols).toArrow()
+        except Exception:  # e.g. spark.driver.maxResultSize: use the JVM
+            self._release()
             return False
         kcol, vcol = table.column(0), table.column(1)
         if kcol.null_count:
@@ -124,8 +163,13 @@ class NativeHashPointIndex:
         self._nulls = vcol.is_null().to_numpy()[order]
         return True
 
+    def _release(self) -> None:
+        with _RESIDENT_LOCK:
+            _RESIDENT.discard(self)
+            self._charge = 0
+
     def _build_probe(self, idf: IndexedDataFrame):
-        """Cluster tier: one cached dict per hash partition."""
+        """The owning-partition probe: one cached dict per hash partition."""
         nk = len(self.keys)
 
         def to_dict(it):
@@ -156,8 +200,6 @@ class NativeHashPointIndex:
                 by_part.setdefault(p, []).append(kt[0] if nk == 1 else kt)
             return by_part
 
-        from pyspark.sql import functions as F
-
         kdf = local_rows_df(self._spark, key_tuples, self._key_schema)
         rows = kdf.select(
             *self.keys, F.pmod(F.hash(*self.keys), F.lit(self.n)).alias("__p")
@@ -173,12 +215,12 @@ class NativeHashPointIndex:
         that is not a Python ``int`` within int64 (``bool`` excluded) on
         an integral key column, or not a ``str`` on a string one — so the
         caller takes a JVM route, which applies Spark's type coercion.
-        Cluster tier: probe only the owning partitions (reference
+        Probe: only the owning partitions run (reference
         IndexedRDD.scala:80-92)."""
         ks = list(ks)
         if not ks:
             return {}
-        if self._parts is None:
+        if self.resident:
             return self._search(ks)
         key_tuples = [k if isinstance(k, tuple) else (k,) for k in ks]
         by_part = self.owning_partitions(key_tuples)
@@ -226,5 +268,6 @@ class NativeHashPointIndex:
 
     def unpersist(self) -> None:
         self._keys = self._values = self._nulls = None
+        self._release()
         if self._parts is not None:
             self._parts.unpersist()

@@ -53,13 +53,20 @@ def get_spark(
 
 
 def driver_budget_bytes() -> int:
-    """Bytes one driver-resident structure may hold: 1/8 of the driver
-    JVM's ``Runtime.maxMemory()`` (about 230 MB on a 2 GB driver). A
-    structure above it takes its cluster path instead. 0 when no
-    SparkContext is active."""
+    """Bytes all driver-resident structures together may hold: 1/8 of
+    the driver JVM's ``Runtime.maxMemory()`` (about 230 MB on a 2 GB
+    driver), and at most half of ``spark.driver.maxResultSize`` (Spark's
+    default 1g; 0 means no limit), since such a structure is collected
+    through the driver's task results. A structure above what is left
+    takes its cluster path instead. 0 when no SparkContext is active."""
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
     if sc is None:
         return 0
-    return sc._jvm.java.lang.Runtime.getRuntime().maxMemory() // 8
+    jvm = sc._jvm
+    budget = jvm.java.lang.Runtime.getRuntime().maxMemory() // 8
+    results = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        sc.getConf().get("spark.driver.maxResultSize", "1g")
+    )
+    return min(budget, results // 2) if results > 0 else budget

@@ -535,7 +535,8 @@ def test_multiget_composite_takes_semi_join(spark, monkeypatch, n_batch):
 
 def test_single_key_in_route_stops_at_crossover(spark, monkeypatch):
     """A single-key batch of up to ``_IN_MAX_KEYS`` renderable literals
-    takes the IN filter; one key more takes the semi-join."""
+    takes the IN filter; one key more takes the semi-join, unless a key
+    does not fit the key column's type."""
     from spark_indexedrdd_spark import core
 
     kv = IndexedDataFrame.from_unique(
@@ -557,6 +558,16 @@ def test_single_key_in_route_stops_at_crossover(spark, monkeypatch):
         assert kv.multiget(batch) == {k: k for k in batch if k < 2000}
         plan = X.final_plan_section(X.executed_plan(seen.pop()))
         assert ("LeftSemi" in plan) == semi, plan
+
+    # past the crossover, a key beyond an int key column's range cannot
+    # be a local relation's row; the IN filter answers it as a miss
+    kv32 = IndexedDataFrame.from_unique(
+        kv.df.select(F.col("k").cast("int").alias("k"), "v"), "k", num_partitions=3
+    )
+    batch = list(range(core._IN_MAX_KEYS)) + [2**40]
+    assert kv32.multiget(batch) == {k: k for k in batch[:-1]}
+    plan = X.final_plan_section(X.executed_plan(seen.pop()))
+    assert "LeftSemi" not in plan, plan
 
 
 # --- MERGE INTO sugar --------------------------------------------------- #

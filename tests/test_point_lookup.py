@@ -1,6 +1,8 @@
-"""Tests for the attached point index (reference IndexedRDD.scala:79-94):
-its driver tier (sorted arrays, no Spark job) and its cluster tier (the
-targeted-partition probe)."""
+"""Tests for the point index (reference IndexedRDD.scala:79-94): its
+driver tier (sorted arrays, no Spark job), the shared byte budget, and
+the targeted-partition probe a directly constructed index falls back to."""
+
+import gc
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,15 +20,15 @@ def idx(spark):
 
 
 @pytest.fixture
-def cluster_tier():
-    """Indexes built in the test take the cluster tier: a zero driver
-    budget fits no frame."""
+def no_budget():
+    """A zero driver budget fits no frame: indexes built directly in the
+    test take the owning-partition probe."""
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(point, "driver_budget_bytes", lambda: 0)
         yield
 
 
-def test_multiget_hits_and_misses(idx, cluster_tier):
+def test_multiget_hits_and_misses(idx, no_budget):
     ni = NativeHashPointIndex(idx)
     assert ni.multiget([0, 7, 199, -1, 1000]) == {0: 0, 7: 14, 199: 398}
     assert ni.get(42) == 84
@@ -123,7 +125,7 @@ def test_native_index_composite(spark):
     }
 
 
-def test_targets_only_owning_partitions(idx, monkeypatch, cluster_tier):
+def test_targets_only_owning_partitions(idx, monkeypatch, no_budget):
     ni = NativeHashPointIndex(idx)
     sc_cls = type(ni._parts.context)
     run_job = sc_cls.runJob
@@ -233,7 +235,7 @@ def _agg_expr_frame(spark, df):
         pytest.param(_agg_expr_frame, True, id="agg_expr"),
     ],
 )
-def test_index_layout_guard(spark, monkeypatch, make, in_place, cluster_tier):
+def test_index_layout_guard(spark, monkeypatch, make, in_place, no_budget):
     """Contract frames are indexed in place (no repartition); a frame
     whose physical partition count breaks the contract is re-laid out
     once, and either way the index answers like the plain multiget."""
@@ -253,12 +255,11 @@ def test_index_layout_guard(spark, monkeypatch, make, in_place, cluster_tier):
         return repartition(self, *a, **kw)
 
     monkeypatch.setattr(df_cls, "repartition", spy)
-    assert idf.with_point_index() is idf
+    ni = NativeHashPointIndex(idf)
     monkeypatch.undo()
     assert len(calls) == (0 if in_place else 1)
 
-    assert idf.multiget(ks) == plain
-    ni = idf._pindex
+    assert ni.multiget(ks) == plain
     assert ni._parts.getNumPartitions() == idf.num_partitions
     # every key sits in the partition the driver routes it to
     placed = ni._parts.mapPartitionsWithIndex(
@@ -276,15 +277,18 @@ def test_with_point_index_requires_single_value(spark):
     assert idf._pindex is None
 
 
-def test_unpersist_releases_point_index(spark, cluster_tier):
+def test_unpersist_releases_point_index(spark, no_budget):
     sc = spark.sparkContext
     df = spark.createDataFrame([(i, i) for i in range(50)], "k long, v long")
     before = sc._jsc.getPersistentRDDs().size()
     idf = IndexedDataFrame.build(df, "k", num_partitions=4).with_point_index()
-    # the cached frame and the index's per-partition dicts
-    assert sc._jsc.getPersistentRDDs().size() == before + 2
-    idf.unpersist(blocking=True)
+    # over budget: nothing attached, the cached frame only
     assert idf._pindex is None
+    assert sc._jsc.getPersistentRDDs().size() == before + 1
+    ni = NativeHashPointIndex(idf)  # the probe's per-partition dicts
+    assert sc._jsc.getPersistentRDDs().size() == before + 2
+    ni.unpersist()
+    idf.unpersist(blocking=True)
     assert sc._jsc.getPersistentRDDs().size() == before
 
 
@@ -305,12 +309,13 @@ def test_unpersist_releases_driver_tier(spark):
     before = sc._jsc.getPersistentRDDs().size()
     idf = IndexedDataFrame.build(df, "k", num_partitions=4).with_point_index()
     ni = idf._pindex
-    assert ni._parts is None and len(ni._keys) == 50
+    assert ni.resident and len(ni._keys) == 50 and ni in point._RESIDENT
     # the cached frame only: the arrays live in driver memory
     assert sc._jsc.getPersistentRDDs().size() == before + 1
     idf.unpersist(blocking=True)
     assert idf._pindex is None
     assert ni._keys is None and ni._values is None and ni._nulls is None
+    assert ni._charge == 0 and ni not in point._RESIDENT
     assert sc._jsc.getPersistentRDDs().size() == before
 
 
@@ -368,7 +373,7 @@ def test_driver_tier_matches_plain_multiget(spark, kdt, vdt):
     assert len(plain) == len(keys) and plain_jobs  # the group sees JVM jobs
 
     idf.with_point_index()
-    assert idf._pindex._parts is None  # the driver tier
+    assert idf._pindex.resident  # the driver tier
     got, jobs = _jobs_of(spark, f"driver-tier-{kdt}-{vdt}", lambda: idf.multiget(batch))
     assert jobs == []
     assert got.keys() == plain.keys()
@@ -383,7 +388,7 @@ def test_overlay_versions_compose_on_driver_tier(spark):
     from the overlay and the rest from the arrays: no Spark job."""
     df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
     idf = IndexedDataFrame.from_unique(df, "k", 2).with_point_index()
-    assert idf._pindex._parts is None
+    assert idf._pindex.resident
     v2 = idf.put(3, 300).delete([5]).multiput({7: 1}, f=SUM_MERGE)
     got, jobs = _jobs_of(spark, "overlay-on-driver-tier", lambda: v2.multiget([3, 5, 7, 9, 500]))
     assert got == {3: 300, 7: 15, 9: 18} and jobs == []
@@ -412,7 +417,7 @@ def test_driver_tier_declines_inexact_batches(spark, kdt, batch):
     routes, and gets exactly their answer."""
     plain = _key_value_frame(spark, kdt, "long")
     indexed = _key_value_frame(spark, kdt, "long").with_point_index()
-    assert indexed._pindex._parts is None
+    assert indexed._pindex.resident
     assert indexed._pindex.multiget(batch) is None
     assert _outcome(lambda: indexed.multiget(batch)) == _outcome(
         lambda: plain.multiget(batch)
@@ -420,11 +425,13 @@ def test_driver_tier_declines_inexact_batches(spark, kdt, batch):
 
 
 def test_tier_selection(spark, monkeypatch):
-    """Only a single-key frame of driver-tier types within the budget
-    is collected; every other frame builds the owning-partition probe."""
+    """with_point_index() attaches an index only to a single-key frame of
+    driver-tier types within the budget; every other frame keeps its
+    reads on the JVM routes. Constructed directly, such a frame builds
+    the owning-partition probe."""
     small = spark.range(1000).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    fits = NativeHashPointIndex(IndexedDataFrame.from_unique(small, "k", 2))
-    assert fits._parts is None and fits.multiget([3, 5000]) == {3: 3}
+    fits = IndexedDataFrame.from_unique(small, "k", 2).with_point_index()
+    assert fits._pindex.resident and fits.multiget([3, 5000]) == {3: 3}
 
     dbl = small.select(F.col("k").cast("double").alias("k"), "v")
     composite = small.select("k", (F.col("k") % 3).alias("k2"), "v")
@@ -433,13 +440,89 @@ def test_tier_selection(spark, monkeypatch):
         IndexedDataFrame.from_unique(composite, ["k", "k2"], 2),
     ]
     for idf in cases:
+        assert idf.with_point_index()._pindex is None
         ni = NativeHashPointIndex(idf)
-        assert ni._parts is not None and ni._keys is None
+        assert ni._parts is not None and not ni.resident
         ni.unpersist()
 
     # over budget: 1,000 rows of two longs in a 1 kB budget
     monkeypatch.setattr(point, "driver_budget_bytes", lambda: 1000)
-    over = NativeHashPointIndex(IndexedDataFrame.from_unique(small, "k", 2))
-    assert over._parts is not None and over.multiget([3, 5000]) == {3: 3}
-    over.unpersist()
+    over = IndexedDataFrame.from_unique(small, "k", 2)
+    assert over.with_point_index()._pindex is None
+    assert over.multiget([3, 5000]) == {3: 3}
+    probe = NativeHashPointIndex(over)
+    assert probe._parts is not None and probe.multiget([3, 5000]) == {3: 3}
+    probe.unpersist()
     fits.unpersist()
+
+
+def test_budget_charges_the_measured_size(spark, monkeypatch):
+    """Catalyst sizes a string at 20 B, so 1,000 rows of 1,000-character
+    values estimate far below a 200 kB budget while the driver would
+    hold over 2 MB: the measured size decides."""
+    df = spark.range(1000).select(
+        F.col("id").alias("k"), F.repeat(F.lit("x"), 1000).alias("v")
+    )
+    idf = IndexedDataFrame.from_unique(df, "k", 2)
+    plan = idf.df._jdf.queryExecution().optimizedPlan()
+    assert int(str(plan.stats().sizeInBytes())) < 200_000
+    monkeypatch.setattr(point, "driver_budget_bytes", lambda: 200_000)
+    assert idf.with_point_index()._pindex is None
+    assert idf.multiget([3, 5000]) == {3: "x" * 1000}
+    idf.unpersist()
+
+
+def test_resident_indexes_share_one_budget(spark, monkeypatch):
+    """Live driver-tier indexes together stay within the budget; an
+    unpersisted one hands its share back, and a failed collect keeps
+    none."""
+    first, second = (
+        IndexedDataFrame.from_unique(
+            spark.range(1000).select(F.col("id").alias("k"), (F.col("id") + i).alias("v")),
+            "k",
+            2,
+        )
+        for i in range(2)
+    )
+    # room for one of them: each holds 1,000 rows x 2 columns x 32 B
+    gc.collect()  # no index from an earlier test drops out mid-test
+    held = sum(ix._charge for ix in point._RESIDENT)
+    monkeypatch.setattr(point, "driver_budget_bytes", lambda: held + 100_000)
+    assert first.with_point_index()._pindex._charge == 64_000
+    assert second.with_point_index()._pindex is None
+    first.unpersist()
+    assert second.with_point_index()._pindex.resident
+    assert second.multiget([7]) == {7: 8}
+
+    def fail(self):
+        raise RuntimeError("collect failed")
+
+    monkeypatch.setattr(type(first.df), "toArrow", fail)
+    again = IndexedDataFrame.from_unique(first.df, "k", 2)
+    monkeypatch.setattr(point, "driver_budget_bytes", lambda: held + 300_000)
+    assert again.with_point_index()._pindex is None
+    ni = NativeHashPointIndex(again)  # kept alive: falls back to the probe
+    assert not ni.resident and ni._charge == 0 and ni not in point._RESIDENT
+    assert sum(ix._charge for ix in point._RESIDENT) == held + 64_000
+    ni.unpersist()
+    second.unpersist()
+
+
+def test_budget_respects_max_result_size(spark):
+    """The collect is a driver task result, so the budget is at most
+    half of spark.driver.maxResultSize (0 = unlimited)."""
+    from spark_indexedrdd_spark.session import driver_budget_bytes
+
+    sc = spark.sparkContext
+    heap = sc._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    old = sc._conf.get("spark.driver.maxResultSize")
+    try:
+        sc._conf.set("spark.driver.maxResultSize", "1m")
+        assert driver_budget_bytes() == min(heap // 8, 512 * 1024)
+        sc._conf.set("spark.driver.maxResultSize", "0")
+        assert driver_budget_bytes() == heap // 8
+    finally:
+        if old is None:
+            sc._jsc.sc().conf().remove("spark.driver.maxResultSize")
+        else:
+            sc._conf.set("spark.driver.maxResultSize", old)
